@@ -1,10 +1,11 @@
 """The transformer library, compiled to Column expressions.
 
 Catalyst-native wherever the semantics allow (T1-T3, T7-T11, T13, T15-T16 of
-SURVEY.md §2.5); Arrow-vectorized pandas UDFs only for sha1-base32hex minting,
-fuzzy date coercion, and the python-`expr` fallback — never row-at-a-time
-Python. User plugins register through `register`/`register_udf`, the Spark
-counterpart of the reference registry (function.py:19-31).
+SURVEY.md §2.5), sha1-base32hex minting included; Arrow-vectorized pandas
+UDFs only for fuzzy date coercion and the python-`expr` fallback — never
+row-at-a-time Python. User plugins register through
+`register`/`register_udf`, the Spark counterpart of the reference registry
+(function.py:19-31).
 """
 
 from __future__ import annotations
@@ -32,20 +33,26 @@ _TYPED_STRUCT = StructType(
 
 
 # ---------------------------------------------------------------------------
+# sha1-base32hex minting, JVM-side
+# ---------------------------------------------------------------------------
+def sha1_b32hex_col(concatenated: Column) -> Column:
+    """base32hex(sha1(utf8(s))) in Catalyst: pyfuncs.sha1_b32hex over
+    pre-concatenated key material, with no Python worker.
+
+    Each 5-hex-digit slice of the 40-digit sha1 hex is 20 bits, i.e. exactly
+    4 base-32 digits, and ``conv``'s digit alphabet 0-9A-V is RFC 4648
+    base32hex; 160 bits make 32 digits, so there is no padding. NULL in,
+    NULL out."""
+    hexdigest = F.sha1(concatenated)
+    return F.concat(*[
+        F.lpad(F.conv(F.substring(hexdigest, 1 + 5 * i, 5), 16, 32), 4, "0")
+        for i in range(8)
+    ])
+
+
+# ---------------------------------------------------------------------------
 # Vectorized UDFs (Arrow batches; the only Python in the executor hot path)
 # ---------------------------------------------------------------------------
-@F.pandas_udf(StringType())
-def _sha1_b32hex_concat(parts: pd.Series) -> pd.Series:
-    """parts: pre-concatenated UTF-8 key material -> base32hex(sha1)."""
-    return parts.map(
-        lambda s: None if s is None else pyfuncs.sha1_b32hex(s)
-    )
-
-
-def sha1_b32hex_col(concatenated: Column) -> Column:
-    return _sha1_b32hex_concat(concatenated)
-
-
 def _dated(fn: Callable) -> Callable[[pd.Series], pd.DataFrame]:
     def convert(s: pd.Series) -> pd.DataFrame:
         out_v, out_dt = [], []

@@ -377,11 +377,22 @@ def compile_uri(pattern: str, cctx: CompileCtx,
         # templated IRI (absolute, CURIE, or relative after expansion)
         strs, suffix_free, statics = _pattern_strings(ref, cctx,
                                                       with_meta=True)
-        # CURIE expansion is the identity when (a) no namespaces are
+        # a literal scheme head ('http://x/') that holds a character no
+        # CURIE can contain and neither '@' nor '^' survives the suffix
+        # strip whole: the strip only cuts a '@lang' / '^^<dt>' starting
+        # after it.  Every value keeps that scheme and that character, so
+        # CURIE expansion and absolutize below are exact identities
+        head = statics[0] if statics else None
+        scheme_headed = (
+            head is not None and _SCHEME_RX.match(head) is not None
+            and _CURIE_BREAK_RX.search(head) is not None
+            and "@" not in head and "^" not in head
+        )
+        # CURIE expansion is also the identity when (a) no namespaces are
         # declared, or (b) a literal segment carries a character the
         # anchored CURIE pattern can never contain (e.g. '/') and no
         # suffix strip could have removed that segment — fold it away
-        curie_identity = (not cctx.namespaces) or (
+        curie_identity = scheme_headed or (not cctx.namespaces) or (
             suffix_free and any(
                 t is not None and _CURIE_BREAK_RX.search(t)
                 for t in statics)
@@ -394,9 +405,8 @@ def compile_uri(pattern: str, cctx: CompileCtx,
             )
         # the absolutize when-chain is the identity when the value
         # provably starts with a literal scheme prefix
-        head = statics[0] if statics else None
-        if (curie_identity and suffix_free and head is not None
-                and _SCHEME_RX.match(head)):
+        if scheme_headed or (curie_identity and suffix_free
+                             and head is not None and _SCHEME_RX.match(head)):
             out = replace(expanded, form="native", dtype="string")
         else:
             out = _absolutize(
@@ -1061,17 +1071,21 @@ def _graph_col(graph: str | Column | None) -> Column:
     return g.cast("string")
 
 
-def _quad_struct(graph: str | Column | None, subj_kind: str,
+def _quad_struct(graph: str | Column | None, subj_kind: str | Column,
                  subj_val: Column,
                  pred: Column, term: Column, inverse: bool) -> Column:
-    """Build one quad struct; NULL when the term is missing."""
+    """Build one quad struct; NULL when the term or the subject is missing.
+    ``subj_kind`` is a literal kind or, on exploded frames, the carried
+    parent column."""
+    if isinstance(subj_kind, str):
+        subj_kind = F.lit(subj_kind)
     if inverse:
         s_k, s_v = term["k"], term["v"]
-        o_k, o_v = F.lit(subj_kind), subj_val
+        o_k, o_v = subj_kind, subj_val
         odt = F.lit(None).cast("string")
         olg = F.lit(None).cast("string")
     else:
-        s_k, s_v = F.lit(subj_kind), subj_val
+        s_k, s_v = subj_kind, subj_val
         o_k, o_v = term["k"], term["v"]
         odt, olg = term["dt"], term["lg"]
     quad = F.struct(
@@ -1326,43 +1340,14 @@ def _emit_links(cdf: DataFrame, graph: str | Column | None, inverse: bool,
     carry = ["__psk", "__ps", "__pp"] + (
         ["__g"] if isinstance(graph, Column) else []
     )
+    frame, term = cdf, value.col
     if value.is_array:
-        exploded = cdf.select(
+        frame = cdf.select(
             *carry, F.explode(value.col).alias("__t")
         ).where(F.col("__t").isNotNull() & F.col("__t")["v"].isNotNull())
-        quad = _carried_quad(graph, F.col("__t"), inverse)
-        return exploded.select(quad.alias("q")).where(
-            F.col("q").isNotNull()
-        ).select("q.*")
-    quad = _carried_quad(graph, value.col, inverse)
-    return cdf.select(quad.alias("q")).where(
+        term = F.col("__t")
+    quad = _quad_struct(graph, F.col("__psk"), F.col("__ps"), F.col("__pp"),
+                        term, inverse)
+    return frame.select(quad.alias("q")).where(
         F.col("q").isNotNull()
     ).select("q.*")
-
-
-def _carried_quad(graph: str | Column | None, term: Column,
-                  inverse: bool) -> Column:
-    subj_kind = F.col("__psk")
-    subj_val = F.col("__ps")
-    pred = F.col("__pp")
-    if inverse:
-        s_k, s_v = term["k"], term["v"]
-        o_k, o_v = subj_kind, subj_val
-        odt = F.lit(None).cast("string")
-        olg = F.lit(None).cast("string")
-    else:
-        s_k, s_v = subj_kind, subj_val
-        o_k, o_v = term["k"], term["v"]
-        odt, olg = term["dt"], term["lg"]
-    quad = F.struct(
-        _graph_col(graph).alias("g"),
-        s_k.cast("string").alias("sk"),
-        s_v.cast("string").alias("s"),
-        pred.cast("string").alias("p"),
-        o_k.cast("string").alias("ok"),
-        o_v.cast("string").alias("o"),
-        odt.cast("string").alias("odt"),
-        olg.cast("string").alias("olg"),
-    )
-    return F.when(term.isNotNull() & term["v"].isNotNull() &
-                  s_v.isNotNull(), quad)

@@ -3,8 +3,9 @@
 Lifecycle (SURVEY.md §3.4):
 
     YAML spec --driver--> models --compile--> per-resource Column plans
-      -> scan -> filters (pushed down) -> mint IRIs/values (codegen exprs +
-      hash/date pandas UDFs) -> explodes -> per-resource quad DFs
+      -> scan -> filters (pushed down) -> mint IRIs/values (codegen exprs,
+      sha1 minting included; date pandas UDFs) -> explodes -> per-resource
+      quad DFs
       -> union -> autoCV distinct-label side aggregation
       -> salted dropDuplicates (RDF set semantics)
 
@@ -53,6 +54,8 @@ class MapperEngine:
         # row-templated @graphAdd resources: lazy distinct-g plans folded
         # into the preserved set by resolve_preserved_graphs()
         self._preserved_graph_plans: list[DataFrame] = []
+        # inputs apply() persisted; unpersisted by release()
+        self._cached_inputs: list[DataFrame] = []
         # fold one-offs once on the driver
         self._oneoff_state = pyeval.EvalState(spec)
         base_ctx = {**spec.context, "$file": None, "$row": None,
@@ -74,7 +77,8 @@ class MapperEngine:
         branch. When the input is expensive (UDF extraction, joins), persist
         it once; default: auto — cache when the spec fans out into more than
         two branches. Pass False when the input is a plain table scan
-        (rescans are then cheaper than materialization).
+        (rescans are then cheaper than materialization). The cache lives
+        until ``release()``.
         """
         spark = df.sparkSession
         prepared = self._prepare(df, file_name, row_order_col)
@@ -82,6 +86,7 @@ class MapperEngine:
             cache_input = len(self.spec.resources) > 2
         if cache_input:
             prepared = prepared.persist()
+            self._cached_inputs.append(prepared)
         constants: dict[str, Any] = dict(self.spec.context)
         constants.setdefault("$graph", DEFAULT_GRAPH)
         constants["__alias_map__"] = self.alias_map
@@ -135,6 +140,14 @@ class MapperEngine:
             return empty_quads(spark)
         out = union_quads(plans)
         return dedup_quads(out, salt=self.dedup_salt) if dedup else out
+
+    def release(self) -> None:
+        """Unpersist the inputs ``apply()`` cached. Call it once the quads
+        and their error counts are written: an engine that outlives one
+        apply (one per stream) otherwise keeps every input it cached."""
+        for df in self._cached_inputs:
+            df.unpersist()
+        self._cached_inputs.clear()
 
     def resolve_preserved_graphs(self) -> set[str]:
         """The full preserved-graph set for the update/delete sinks.

@@ -84,7 +84,10 @@ def stream_mapping(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         quads = engine.apply(batch_df, file_name=f"{file_name}-{batch_id}")
-        quads.write.mode("append").parquet(out_path)
+        try:
+            quads.write.mode("append").parquet(out_path)
+        finally:
+            engine.release()
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

@@ -252,3 +252,91 @@ def test_cap_per_key_no_single_partition(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange SinglePartition" not in plan, plan
     assert "EvalPython" not in plan
+
+
+def _embedded_subject_plan(spark, id_template):
+    spec = MappingSpec({
+        "globals": {"$datasetBase": "http://base.example/ds"},
+        "resources": [{
+            "name": "r",
+            "properties": {"@id": "<http://x/r/{id}>",
+                           "<http://x/def/part>": "{parts | map_to('part')}"},
+        }],
+        "embedded": [{
+            "name": "part",
+            "properties": {"@id": id_template, "<http://x/def/n>": "{n}"},
+        }],
+    }, auto_declare=False)
+    df = spark.createDataFrame(
+        [("1", [("s1", 1)])],
+        "id string, parts array<struct<sku:string,n:bigint>>")
+    quads = MapperEngine(spec).apply(df, dedup=False)
+    return quads._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_scheme_headed_embedded_subject_has_no_curie_lookup(spark):
+    """'<http://x/c/{sku}>' keeps its scheme and its '/' through the suffix
+    strip, so the CURIE expansion (a namespace map lookup) and absolutize
+    fold away; a head a CURIE could extend ('urn:') keeps the lookup."""
+    assert "map(keys:" not in _embedded_subject_plan(
+        spark, "<http://x/c/{sku}>")
+    assert "map(keys:" in _embedded_subject_plan(spark, "<urn:{sku}>")
+
+
+def test_products_json_plan_stays_small(spark):
+    """A products-shaped JSON spec (hash subject, date parse, autoCV,
+    map_by, lang literals, split, map_to components with a scheme-headed
+    subject) keeps a small analyzed plan. Carrying the unfolded
+    strip/CURIE/absolutize tree into every subject reference makes it
+    ~840k chars and pushes the emission stage past the 64 KB
+    generated-method limit; folded, it is ~115k."""
+    spec = MappingSpec({
+        "globals": {"$datasetBase": "http://data.example.org/reg"},
+        "mappings": {"status": {
+            "A": "<http://data.example.org/def/status/Approved>",
+            "W": "<http://data.example.org/def/status/Withdrawn>"}},
+        "resources": [{"name": "product", "properties": {
+            "@id": "<hash(id,name)>",
+            "@type": "<http://data.example.org/def/Product>",
+            "<rdfs:label>": "{name}@en",
+            "regNo": "{id}",
+            "registered": "{registered | asDate}",
+            "category": "{category | autoCV('category')}",
+            "status": "{status | map_by('status')}",
+            "quantity": "{qty | asInt}",
+            "description": "{description}@en",
+            "tag": "{tags | splitComma}",
+            "component": "{components | map_to('component')}"}}],
+        "embedded": [{"name": "component", "properties": {
+            "@id": "<http://data.example.org/component/{sku}>",
+            "share": "{share}"}}],
+    })
+    df = spark.createDataFrame(
+        [("1", "n", "2020-01-01", "c", "A", "3", "d", "a,b", [("s", 0.5)])],
+        "id string, name string, registered string, category string, "
+        "status string, qty string, description string, tags string, "
+        "components array<struct<sku:string,share:double>>")
+    quads = MapperEngine(spec).apply(df)
+    analyzed = quads._jdf.queryExecution().analyzed().toString()
+    assert len(analyzed) < 250_000, len(analyzed)
+
+
+def test_minting_only_spec_runs_no_python(spark):
+    """sha1-base32hex minting is Catalyst: <hash(..)> subjects, autoCV
+    hash concepts and the hash() transformer leave no *EvalPython node."""
+    spec = MappingSpec({
+        "globals": {"$datasetBase": "http://x"},
+        "resources": [{
+            "name": "d",
+            "properties": {
+                "@id": "<hash(id,name)>",
+                "<http://x/def/cv>": "{name | autoCV('names', 'hash')}",
+                "<http://x/def/h>": "{name | hash('salt')}",
+                "<http://x/def/c>": "<http://x/c/{name}>",
+            },
+        }],
+    }, auto_declare=False)
+    df = spark.createDataFrame([("1", "a"), ("2", None)], "id string, name string")
+    quads = MapperEngine(spec).apply(df)
+    plan = quads._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan

@@ -369,3 +369,42 @@ def test_stream_session_stats_matches_batch(spark, tmp_path):
                 if r.session_start < t0 + 600 * m}  # sentinels still open
     assert expected.items() <= streamed.items()
     assert len(expected) == 3  # u7 x2 + u8 x1 closed sessions
+
+
+def test_stream_mapping_releases_cached_batches(spark, tmp_path):
+    """A spec of more than two resources persists each micro-batch's input
+    (MapperEngine.apply); the stream unpersists it once the batch is
+    written, so a long stream holds no cached batch per trigger."""
+    import time
+
+    src = str(tmp_path / "src")
+    for part in range(4):
+        spark.range(part * 5, part * 5 + 5).select(
+            F.col("id").alias("doc_id"),
+        ).coalesce(1).write.mode("append").parquet(src)
+    spec = MappingSpec({
+        "resources": [
+            {"name": n, "properties": {
+                "@id": f"<http://example.org/{n}/{{doc_id}}>",
+                "<http://example.org/def/id>": "{doc_id}"}}
+            for n in ("a", "b", "c")
+        ],
+    }, auto_declare=False)
+
+    def cached_ids():
+        return {s.id() for s in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_ids()  # other tests may legitimately hold caches
+    stream_df = (spark.readStream.schema("doc_id long")
+                 .option("maxFilesPerTrigger", 1).parquet(src))
+    query = stream_mapping(spec, stream_df, str(tmp_path / "quads"),
+                           str(tmp_path / "ckpt"))
+    query.awaitTermination(120)
+    assert query.lastProgress["batchId"] == 3  # one batch per file
+    assert spark.read.parquet(str(tmp_path / "quads")).count() == 60
+    deadline = time.time() + 10  # unpersist is asynchronous
+    while cached_ids() - before and time.time() < deadline:
+        time.sleep(0.2)
+    leaked = cached_ids() - before
+    assert not leaked, leaked
