@@ -3365,95 +3365,84 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordered so the queries whose IMPLEMENTATIONS changed most recently
-    # come first: the driver samples <=50 of the 77 per round, so
-    # front-loading the round-6-touched plans (engine expression folding,
-    # dedup placement, minhash/similarity restructures, adaptive input
-    # spread) guarantees CORRECTNESS_r06 covers exactly what changed.
-    # Results are order-independent; this only curates the sample.
+    # by family (the first word of the name), then alphabetically
     return {
-        # round-6 touched: engine/compiler folding + dedup placement
-        "kg_flagship": q_kg_flagship,
-        "kg_bgp_star": q_kg_bgp_star,
-        "kg_construct": q_kg_construct,
-        "kg_bgp_optional": q_kg_bgp_optional,
-        "kg_update": q_kg_update,
-        "kg_entity_table": q_kg_entity_table,
-        "kg_typed_literals": q_kg_typed_literals,
-        "kg_shape_violations": q_kg_shape_violations,
-        "kg_predicate_stats": q_kg_predicate_stats,
-        "kg_path_cites": q_kg_path_cites,
-        "kg_path_related": q_kg_path_related,
-        "kg_path_closure": q_kg_path_closure,
-        "kg_bgp_values_bind": q_kg_bgp_values_bind,
-        "kg_bgp_exists_topk": q_kg_bgp_exists_topk,
-        "kg_bgp_subquery": q_kg_bgp_subquery,
-        "kg_sparql_select": q_kg_sparql_select,
-        "kg_sparql_agg": q_kg_sparql_agg,
-        "kg_sparql_path": q_kg_sparql_path,
-        "kg_bgp_stored": q_kg_bgp_stored,
-        "kg_describe": q_kg_describe,
-        "kg_group_by": q_kg_group_by,
-        "kg_filters": q_kg_filters,
-        "kg_explode_tokens": q_kg_explode_tokens,
-        "kg_map_by": q_kg_map_by,
-        "kg_autocv": q_kg_autocv,
-        "kg_inverse_backref": q_kg_inverse_backref,
-        "kg_named_graphs": q_kg_named_graphs,
-        "kg_hash_minting": q_kg_hash_minting,
-        "kg_row_graphs": q_kg_row_graphs,
-        "kg_rdfs_inference": q_kg_rdfs_inference,
-        "kg_sameas": q_kg_sameas,
-        # round-6 touched: minhash/similarity/curation restructures
-        "dedup_minhash_buckets": q_dedup_minhash_buckets,
-        "dedup_minhash_pairs": q_dedup_minhash_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "semantic_dedup": q_semantic_dedup,
-        "embedding_near_dups": q_embedding_near_dups,
-        "corpus_curation": q_corpus_curation,
-        "corpus_curation_neardup": q_corpus_curation_neardup,
+        "ann_ivf": q_ann_ivf,
         "ann_ivf_indexed": q_ann_ivf_indexed,
         "ann_ivfpq_indexed": q_ann_ivfpq_indexed,
-        "ann_lsh_indexed": q_ann_lsh_indexed,
-        "link_mentions": q_link_mentions,
-        "connected_components": q_connected_components,
-        # round-6 continuation: matrix-literal ANN folding, one-pass
-        # tfidf/repetition, pipeline compile sharing (web/incremental)
-        "ann_topk": q_ann_topk,
         "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "tfidf_terms": q_tfidf_terms,
-        "repetition_metrics": q_repetition_metrics,
-        "web_canonical_urls": q_web_canonical_urls,
-        "kg_incremental": q_kg_incremental,
-        # unchanged plans (shared caches only / untouched) — all
-        # r3-r5-driver-verified with code otherwise unchanged
-        "pricing_summary": q_pricing_summary,
-        "segment_revenue": q_segment_revenue,
-        "top_events_per_type": q_top_events_per_type,
-        "session_stats": q_session_stats,
-        "events_asof": q_events_asof,
-        "event_rollup": q_event_rollup,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard": q_dedup_jaccard,
-        "dedup_simhash": q_dedup_simhash,
-        "kg_json_props": q_kg_json_props,
-        "pii_scrub": q_pii_scrub,
-        "lm_logprob": q_lm_logprob,
-        "corpus_stats": q_corpus_stats,
-        "chunk_documents": q_chunk_documents,
-        "dedup_paragraphs": q_dedup_paragraphs,
+        "ann_lsh_indexed": q_ann_lsh_indexed,
+        "ann_topk": q_ann_topk,
         "cap_per_source": q_cap_per_source,
-        "pack_sequences": q_pack_sequences,
-        "kg_degrees": q_kg_degrees,
+        "chunk_documents": q_chunk_documents,
+        "connected_components": q_connected_components,
+        "corpus_curation": q_corpus_curation,
+        "corpus_curation_neardup": q_corpus_curation_neardup,
         "corpus_sample": q_corpus_sample,
-        "text_analysis": q_text_analysis,
-        "text_winnow": q_text_winnow,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_frames": q_multimodal_frames,
-        "quality_filter": q_quality_filter,
+        "corpus_stats": q_corpus_stats,
         "decontaminate": q_decontaminate,
         "decontaminate_bloom": q_decontaminate_bloom,
+        "dedup_clusters": q_dedup_clusters,
+        "dedup_exact": q_dedup_exact,
+        "dedup_jaccard": q_dedup_jaccard,
+        "dedup_minhash_buckets": q_dedup_minhash_buckets,
+        "dedup_minhash_pairs": q_dedup_minhash_pairs,
+        "dedup_paragraphs": q_dedup_paragraphs,
+        "dedup_simhash": q_dedup_simhash,
+        "embedding_near_dups": q_embedding_near_dups,
+        "event_rollup": q_event_rollup,
+        "events_asof": q_events_asof,
+        "kg_autocv": q_kg_autocv,
+        "kg_bgp_exists_topk": q_kg_bgp_exists_topk,
+        "kg_bgp_optional": q_kg_bgp_optional,
+        "kg_bgp_star": q_kg_bgp_star,
+        "kg_bgp_stored": q_kg_bgp_stored,
+        "kg_bgp_subquery": q_kg_bgp_subquery,
+        "kg_bgp_values_bind": q_kg_bgp_values_bind,
+        "kg_construct": q_kg_construct,
+        "kg_degrees": q_kg_degrees,
+        "kg_describe": q_kg_describe,
+        "kg_entity_table": q_kg_entity_table,
+        "kg_explode_tokens": q_kg_explode_tokens,
+        "kg_filters": q_kg_filters,
+        "kg_flagship": q_kg_flagship,
+        "kg_group_by": q_kg_group_by,
+        "kg_hash_minting": q_kg_hash_minting,
+        "kg_incremental": q_kg_incremental,
+        "kg_inverse_backref": q_kg_inverse_backref,
+        "kg_json_props": q_kg_json_props,
+        "kg_map_by": q_kg_map_by,
+        "kg_named_graphs": q_kg_named_graphs,
+        "kg_path_cites": q_kg_path_cites,
+        "kg_path_closure": q_kg_path_closure,
+        "kg_path_related": q_kg_path_related,
+        "kg_predicate_stats": q_kg_predicate_stats,
+        "kg_rdfs_inference": q_kg_rdfs_inference,
+        "kg_row_graphs": q_kg_row_graphs,
+        "kg_sameas": q_kg_sameas,
+        "kg_shape_violations": q_kg_shape_violations,
+        "kg_sparql_agg": q_kg_sparql_agg,
+        "kg_sparql_path": q_kg_sparql_path,
+        "kg_sparql_select": q_kg_sparql_select,
+        "kg_typed_literals": q_kg_typed_literals,
+        "kg_update": q_kg_update,
+        "link_mentions": q_link_mentions,
+        "lm_logprob": q_lm_logprob,
+        "multimodal_features": q_multimodal_features,
+        "multimodal_frames": q_multimodal_frames,
+        "pack_sequences": q_pack_sequences,
+        "pii_scrub": q_pii_scrub,
+        "pricing_summary": q_pricing_summary,
+        "quality_filter": q_quality_filter,
+        "repetition_metrics": q_repetition_metrics,
+        "segment_revenue": q_segment_revenue,
+        "semantic_dedup": q_semantic_dedup,
+        "session_stats": q_session_stats,
+        "text_analysis": q_text_analysis,
+        "text_winnow": q_text_winnow,
+        "tfidf_terms": q_tfidf_terms,
+        "top_events_per_type": q_top_events_per_type,
+        "web_canonical_urls": q_web_canonical_urls,
         "winnow_pairs": q_winnow_pairs,
     }
 

@@ -18,7 +18,12 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rdf_mapper_spark.compiler.values import ValueExpr, simple_dtype
+from rdf_mapper_spark.compiler.values import (
+    ValueExpr,
+    namespace_map,
+    simple_dtype,
+    sql_ident,
+)
 from rdf_mapper_spark.spec import MappingSpec
 from rdf_mapper_spark.terms import Term
 
@@ -87,10 +92,20 @@ class CompileCtx:
     # guaranteed to happen.
     pending_joins: list = field(default_factory=list)
     joinable: bool = False
+    # JVM constants built once per compile (the namespace map); shared
+    # through child(), so they live exactly as long as this compile
+    jvm_consts: dict = field(default_factory=dict)
 
     @property
     def namespaces(self) -> dict[str, str]:
         return self.spec.namespaces
+
+    @property
+    def ns_map(self) -> Optional[Column]:
+        """`namespace_map` of the spec, built on first use."""
+        if "ns_map" not in self.jvm_consts:
+            self.jvm_consts["ns_map"] = namespace_map(self.namespaces)
+        return self.jvm_consts["ns_map"]
 
     def has_var(self, name: str) -> bool:
         if name in self.columns:
@@ -143,13 +158,14 @@ class CompileCtx:
             reconcile_cache=self.reconcile_cache,
             pending_joins=self.pending_joins if same_df else [],
             joinable=self.joinable and same_df,
+            jvm_consts=self.jvm_consts,
         )
         return out
 
 
 def quoted_col(name: str) -> Column:
     """Column reference robust to dots/colons/spaces in the name."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(sql_ident(name))
 
 
 def df_columns(df: DataFrame) -> dict[str, tuple[Column, str]]:

@@ -9,6 +9,12 @@ selects.  Fan-out constructs (map_to/smap_to over nested arrays) compile to
 auto-declared vocabulary folds to constants gated on "resource fired at
 least once".
 
+Plan building is py4j traffic (one round trip per `Column` method or `F.*`
+call), so the emission side is SQL text: the projection names every input
+column, and each quad array over those names is one `selectExpr`
+(`_emit_quads`, `_quad_sql`).  Constant quads are one JSON string literal
+(`localrel.json_rows`) behind the firing gate.
+
 Reference semantics: template_support.py:205-396 (process_resource_spec /
 process_property_value), 431-604 (map_to/smap_to/map_by/reconcile/autoCV).
 """
@@ -43,9 +49,13 @@ from rdf_mapper_spark.compiler.values import (
     drop_null_terms,
     iri_term,
     runtime_curie_expand,
+    sql_ident,
+    sql_string,
     term_struct,
     to_terms,
 )
+from rdf_mapper_spark.localrel import json_rows
+from rdf_mapper_spark.quads import QUAD_FIELDS, quad_schema
 from rdf_mapper_spark.pyfuncs import normalize as py_normalize
 from rdf_mapper_spark.spec import (
     OWL_CLASS,
@@ -80,10 +90,6 @@ _HASH_FORM_RX = re.compile(r"hash\s?\(([^)]*)\)$")
 _COMMA_RX = re.compile(r"\s*,\s*")
 
 TERM_NULL = "struct<k:string,v:string,dt:string,lg:string>"
-QUAD_STRUCT_NULL = (
-    "struct<g:string,sk:string,s:string,p:string,"
-    "ok:string,o:string,odt:string,olg:string>"
-)
 
 #: dtypes whose canonical lexical form (lexical_column) provably contains
 #: no term-syntax marker ('@', '^', '<', '>') and no character outside
@@ -170,7 +176,7 @@ def compile_pattern(template: str, cctx: CompileCtx) -> ValueExpr | EmbeddedFano
     # need an interpreted higher-order filter); emission paths drop nulls
     # after their (codegen'd) explode instead
     can_at, can_caret, _ = _template_safety(pt, parts, cctx)
-    return to_terms(result, pt.pattern_type, cctx.namespaces,
+    return to_terms(result, pt.pattern_type, cctx.ns_map,
                     suffix_free=not can_at and not can_caret)
 
 
@@ -401,7 +407,7 @@ def compile_uri(pattern: str, cctx: CompileCtx,
             expanded = strs
         else:
             expanded = strs.map_elements(
-                lambda c: runtime_curie_expand(c, dict(cctx.namespaces))
+                lambda c: runtime_curie_expand(c, cctx.ns_map)
             )
         # the absolutize when-chain is the identity when the value
         # provably starts with a literal scheme prefix
@@ -545,26 +551,13 @@ def _const_quads_gated(df: DataFrame, rows: list[tuple]) -> DataFrame:
 
     The gate keeps reference behavior: vocabulary/schemes appear only when
     the resource actually fired (template_support.py:408-424). ``limit(1)``
-    terminates the scan early, so the gate is O(first matching row).
+    terminates the scan early, so the gate is O(first matching row).  The
+    rows themselves are one JSON string literal (`localrel.json_rows`).
     """
-    structs = [
-        F.struct(
-            F.lit(g).cast("string").alias("g"),
-            F.lit(sk).cast("string").alias("sk"),
-            F.lit(s).cast("string").alias("s"),
-            F.lit(p).cast("string").alias("p"),
-            F.lit(ok).cast("string").alias("ok"),
-            F.lit(o).cast("string").alias("o"),
-            F.lit(odt).cast("string").alias("odt"),
-            F.lit(olg).cast("string").alias("olg"),
-        )
-        for (g, sk, s, p, ok, o, odt, olg) in rows
-    ]
-    return (
-        df.limit(1)
-        .select(F.explode(F.array(*structs)).alias("q"))
-        .select("q.*")
-    )
+    arr = json_rows(rows, quad_schema())
+    if arr is None:
+        raise TypeError("constant quad fields must be strings or None")
+    return df.limit(1).select(F.inline(arr))
 
 
 # ---------------------------------------------------------------------------
@@ -617,6 +610,7 @@ def autocv_side_quads(use: AutoCVUse, spec: MappingSpec,
     base = f"{dataset_base}/def/{use.cv_name}"
     scheme_id = base + "_scheme"
     g = use.graph
+    g_sql = "NULL" if g is None else sql_string(g)
     labels = (
         use.source_df.select(use.label_col.alias("label"))
         .where(F.col("label").isNotNull() & (F.col("label") != ""))
@@ -628,30 +622,21 @@ def autocv_side_quads(use: AutoCVUse, spec: MappingSpec,
         else normalize_col(F.col("label"))
     )
     concept = F.concat(F.lit(base + "/"), local)
-
-    def q(s: Column, p: str, ok: str, o: Column, odt=None, olg=None) -> Column:
-        return F.struct(
-            F.lit(g).cast("string").alias("g"),
-            F.lit("iri").alias("sk"),
-            s.cast("string").alias("s"),
-            F.lit(p).alias("p"),
-            F.lit(ok).alias("ok"),
-            o.cast("string").alias("o"),
-            F.lit(odt).cast("string").alias("odt"),
-            F.lit(olg).cast("string").alias("olg"),
+    c, label = sql_ident("__c"), sql_ident("label")
+    scheme = sql_string(scheme_id)
+    quads = [
+        _quad_fields_sql(g_sql, sql_string("iri"), s, sql_string(p),
+                         sql_string(ok), o, "NULL", "NULL")
+        for s, p, ok, o in (
+            (c, RDF_TYPE, "iri", sql_string(SKOS + "Concept")),
+            (c, SKOS + "prefLabel", "literal", label),
+            (c, SKOS + "inScheme", "iri", scheme),
+            (c, SKOS + "topConceptOf", "iri", scheme),
+            (scheme, SKOS + "hasTopConcept", "iri", c),
         )
-
-    concept_quads = labels.select(
-        F.explode(
-            F.array(
-                q(concept, RDF_TYPE, "iri", F.lit(SKOS + "Concept")),
-                q(concept, SKOS + "prefLabel", "literal", F.col("label")),
-                q(concept, SKOS + "inScheme", "iri", F.lit(scheme_id)),
-                q(concept, SKOS + "topConceptOf", "iri", F.lit(scheme_id)),
-                q(F.lit(scheme_id), SKOS + "hasTopConcept", "iri", concept),
-            )
-        ).alias("q")
-    ).select("q.*")
+    ]
+    concept_quads = labels.select("label", concept.alias("__c")).selectExpr(
+        f"explode(array({', '.join(quads)})) AS q").selectExpr("q.*")
     scheme_rows = [
         (g, "iri", scheme_id, RDF_TYPE, "iri", SKOS + "ConceptScheme", None, None),
         (g, "iri", scheme_id, "http://purl.org/dc/terms/title", "literal",
@@ -959,7 +944,7 @@ def _compile_resource_body(rs: ResourceSpec, fctx: CompileCtx, fdf: DataFrame,
         )
         _register_vocab(pctx, "class", rs.name, cls_id, rs.comment, OWL_CLASS)
         emissions.append(
-            (F.lit(RDF_TYPE), ValueExpr(iri_term(F.lit(cls_id)), form="term"),
+            (F.lit(RDF_TYPE), ValueExpr(iri_term(cls_id), form="term"),
              False)
         )
     elif type_template:
@@ -1020,87 +1005,85 @@ def _compile_resource_body(rs: ResourceSpec, fctx: CompileCtx, fdf: DataFrame,
     return out
 
 
-def _emit_quads(fdf: DataFrame, graph: str | Column | None, subj_kind: str,
-                subj_val: Column,
+def _emit_quads(frame: DataFrame, graph: str | Column | None,
+                subj_kind: str | Column, subj_val: Column,
                 emissions: list[tuple[Column, ValueExpr, bool]]
                 ) -> list[DataFrame]:
-    graph_is_col = isinstance(graph, Column)
+    """Quad plans for one subject's (predicate, term, inverse) emissions.
+
+    ONE projection names every input: ``__subj``, ``__sk`` (a carried
+    subject kind), ``__g`` (a row-templated graph) and ``__p{i}`` /
+    ``__t{i}``, so each quad after it is one SQL expression over those
+    names.  The scalar terms' quads explode from one plain CreateArray
+    and NULLs are filtered after (higher-order filter/transform would
+    force interpreted eval — measured ~50x slower on the quad hot path);
+    each array-valued term explodes first and then wraps."""
     proj: list[Column] = [subj_val.alias("__subj")]
-    if graph_is_col:
+    carry = [sql_ident("__subj")]
+    if isinstance(subj_kind, Column):
+        proj.append(subj_kind.alias("__sk"))
+        sk = sql_ident("__sk")
+        carry.append(sk)
+    else:
+        sk = sql_string(subj_kind)
+    if isinstance(graph, Column):
         proj.append(graph.alias("__g"))
-        graph = F.col("__g")
-    meta: list[tuple[str, str, bool, bool]] = []  # (tcol, pcol, inverse, is_array)
-    for i, (pred, term_ve, inverse) in enumerate(emissions):
+        g = sql_ident("__g")
+        carry.append(g)
+    else:
+        g = "NULL" if graph is None else sql_string(graph)
+    for i, (pred, term_ve, _) in enumerate(emissions):
         proj.append(term_ve.col.alias(f"__t{i}"))
         proj.append(pred.alias(f"__p{i}"))
-        meta.append((f"__t{i}", f"__p{i}", inverse, term_ve.is_array))
-    flat = fdf.select(*proj)
+    flat = frame.select(*proj)
 
     out: list[DataFrame] = []
     scalar_quads = [
-        _quad_struct(graph, subj_kind, F.col("__subj"), F.col(pcol),
-                     F.col(tcol), inverse)
-        for tcol, pcol, inverse, is_array in meta if not is_array
+        _quad_sql(g, sk, f"__p{i}", f"__t{i}", inverse)
+        for i, (_, term_ve, inverse) in enumerate(emissions)
+        if not term_ve.is_array
     ]
     if scalar_quads:
-        arr = (F.array(*scalar_quads) if len(scalar_quads) > 1
-               else F.array(scalar_quads[0]))
-        out.append(
-            flat.select(F.explode(arr).alias("q"))
-            .where(F.col("q").isNotNull())
-            .select("q.*")
-        )
-    for tcol, pcol, inverse, is_array in meta:
-        if not is_array:
+        out.append(_non_null_quads(flat.selectExpr(
+            f"explode(array({', '.join(scalar_quads)})) AS q")))
+    for i, (_, term_ve, inverse) in enumerate(emissions):
+        if not term_ve.is_array:
             continue
-        carry = ["__subj", pcol] + (["__g"] if graph_is_col else [])
-        exploded = flat.select(
-            *carry, F.explode(tcol).alias("__t")
-        ).where(F.col("__t").isNotNull() & F.col("__t")["v"].isNotNull())
-        quad = _quad_struct(graph, subj_kind, F.col("__subj"),
-                            F.col(pcol), F.col("__t"), inverse)
-        out.append(
-            exploded.select(quad.alias("q"))
-            .where(F.col("q").isNotNull()).select("q.*")
-        )
+        t = sql_ident("__t")
+        exploded = flat.selectExpr(
+            *carry, sql_ident(f"__p{i}"),
+            f"explode({sql_ident(f'__t{i}')}) AS {t}",
+        ).where(f"{t} IS NOT NULL AND {t}.v IS NOT NULL")
+        out.append(_non_null_quads(exploded.selectExpr(
+            _quad_sql(g, sk, f"__p{i}", "__t", inverse) + " AS q")))
     return out
 
 
-def _graph_col(graph: str | Column | None) -> Column:
-    g = graph if isinstance(graph, Column) else F.lit(graph)
-    return g.cast("string")
+def _non_null_quads(q_frame: DataFrame) -> DataFrame:
+    return q_frame.where("q IS NOT NULL").selectExpr("q.*")
 
 
-def _quad_struct(graph: str | Column | None, subj_kind: str | Column,
-                 subj_val: Column,
-                 pred: Column, term: Column, inverse: bool) -> Column:
-    """Build one quad struct; NULL when the term or the subject is missing.
-    ``subj_kind`` is a literal kind or, on exploded frames, the carried
-    parent column."""
-    if isinstance(subj_kind, str):
-        subj_kind = F.lit(subj_kind)
+def _quad_fields_sql(*fields: str) -> str:
+    """``named_struct`` SQL text of one quad from its eight field
+    expressions (SQL text), each cast to string."""
+    return "named_struct({})".format(", ".join(
+        f"{sql_string(name)}, CAST({e} AS STRING)"
+        for name, e in zip(QUAD_FIELDS, fields)))
+
+
+def _quad_sql(g: str, sk: str, p: str, t: str, inverse: bool) -> str:
+    """SQL text of one quad over named columns: subject ``__subj`` of
+    kind ``sk``, predicate column ``p``, term struct column ``t``, graph
+    ``g``; NULL when the term, its value or the subject is missing."""
+    s, p, t = sql_ident("__subj"), sql_ident(p), sql_ident(t)
     if inverse:
-        s_k, s_v = term["k"], term["v"]
-        o_k, o_v = subj_kind, subj_val
-        odt = F.lit(None).cast("string")
-        olg = F.lit(None).cast("string")
+        quad = _quad_fields_sql(g, f"{t}.k", f"{t}.v", p, sk, s,
+                                "NULL", "NULL")
     else:
-        s_k, s_v = subj_kind, subj_val
-        o_k, o_v = term["k"], term["v"]
-        odt, olg = term["dt"], term["lg"]
-    quad = F.struct(
-        _graph_col(graph).alias("g"),
-        s_k.cast("string").alias("sk"),
-        s_v.cast("string").alias("s"),
-        pred.cast("string").alias("p"),
-        o_k.cast("string").alias("ok"),
-        o_v.cast("string").alias("o"),
-        odt.cast("string").alias("odt"),
-        olg.cast("string").alias("olg"),
-    )
-    return F.when(
-        term.isNotNull() & term["v"].isNotNull() & subj_val.isNotNull(), quad
-    )
+        quad = _quad_fields_sql(g, sk, s, p, f"{t}.k", f"{t}.v",
+                                f"{t}.dt", f"{t}.lg")
+    return (f"CASE WHEN {t} IS NOT NULL AND {t}.v IS NOT NULL "
+            f"AND {s} IS NOT NULL THEN {quad} END")
 
 
 def _skolem_bnode(name: str, cctx: CompileCtx) -> Column:
@@ -1216,11 +1199,9 @@ def _compile_nested_resource(
         # (template_support.py:277-282); emit from the child-filtered frame
         vcol = (F.element_at(F.array_compact(value.col), 1)
                 if value.is_array else value.col)
-        quad = _quad_struct(graph, subj_kind, subj_val, pred, vcol, inverse)
-        fanouts.append(
-            cdf.select(quad.alias("q")).where(F.col("q").isNotNull())
-            .select("q.*")
-        )
+        fanouts.extend(_emit_quads(
+            cdf, graph, subj_kind, subj_val,
+            [(pred, ValueExpr(vcol, form="term"), inverse)]))
         return
 
     cctx3 = cctx2.child(cdf, dict(cctx2.columns), dict(cctx2.constants))
@@ -1231,11 +1212,9 @@ def _compile_nested_resource(
     child_bl = cctx3.backlinks.get(child.name)
     if child_bl is not None and child_bl.value_col is not None:
         term = term_struct(child_bl.kind_col, child_bl.value_col)
-        link = cdf.select(
-            _quad_struct(graph, subj_kind, subj_val, pred, term, inverse)
-            .alias("q")
-        ).where(F.col("q").isNotNull()).select("q.*")
-        fanouts.append(link)
+        fanouts.extend(_emit_quads(
+            cdf, graph, subj_kind, subj_val,
+            [(pred, ValueExpr(term, form="term"), inverse)]))
 
 
 def _compile_fanout(
@@ -1316,8 +1295,7 @@ def _compile_fanout(
         value = compile_pattern(child_rs.pattern, cctx3)
         if isinstance(value, EmbeddedFanout):
             raise ValueError("nested map_to inside literal template")
-        links = _emit_links(cdf, graph, inverse, value)
-        out.append(links)
+        out.extend(_emit_links(cdf, graph, inverse, value))
         return out
 
     child_dfs = _compile_resource_body(child_rs, cctx3, cdf, graph)
@@ -1327,27 +1305,14 @@ def _compile_fanout(
         term_ve = ValueExpr(
             term_struct(child_bl.kind_col, child_bl.value_col), form="term"
         )
-        out.append(_emit_links(cdf, graph, inverse, term_ve))
+        out.extend(_emit_links(cdf, graph, inverse, term_ve))
     return out
 
 
 def _emit_links(cdf: DataFrame, graph: str | Column | None, inverse: bool,
-                value: ValueExpr) -> DataFrame:
-    """Parent link triples from the exploded frame (parent cols carried).
-
-    Array values explode BEFORE the quad struct is built — plain explode +
-    WHERE stays in whole-stage codegen (HOF transform/filter would not)."""
-    carry = ["__psk", "__ps", "__pp"] + (
-        ["__g"] if isinstance(graph, Column) else []
-    )
-    frame, term = cdf, value.col
-    if value.is_array:
-        frame = cdf.select(
-            *carry, F.explode(value.col).alias("__t")
-        ).where(F.col("__t").isNotNull() & F.col("__t")["v"].isNotNull())
-        term = F.col("__t")
-    quad = _quad_struct(graph, F.col("__psk"), F.col("__ps"), F.col("__pp"),
-                        term, inverse)
-    return frame.select(quad.alias("q")).where(
-        F.col("q").isNotNull()
-    ).select("q.*")
+                value: ValueExpr) -> list[DataFrame]:
+    """Parent link triples from the exploded frame, whose parent subject
+    kind, subject and predicate are the carried ``__psk``/``__ps``/``__pp``
+    columns."""
+    return _emit_quads(cdf, graph, F.col("__psk"), F.col("__ps"),
+                       [(F.col("__pp"), value, inverse)])

@@ -13,6 +13,13 @@ The runtime value model mirrors the reference's pattern engine
 * the final wrap step re-parses lang/datatype suffixes from the *result
   value* (pattern.py:49-65) with JVM regexes and produces the flat term
   struct `(k, v, dt, lg)`.
+
+Every call into a `Column` method or `F.*` function is a py4j round trip,
+so the builders here make one call where the tree allows it: a term
+struct is one `named_struct`, and the namespace map for runtime CURIE
+expansion is one SQL expression built once per compile (`namespace_map`,
+held by the compile context).  SQL text goes through two helpers,
+`sql_string` for literals and `sql_ident` for identifiers.
 """
 
 from __future__ import annotations
@@ -52,11 +59,56 @@ _DTYPE_XSD = {
 }
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal that parses back to exactly ``s``.
+
+    Quote and backslash are backslash-escaped.  ``$`` becomes ``\\u0024``:
+    the SQL parser substitutes ``${name}`` in the raw text before lexing
+    (an unknown name becomes ""), and an escape is not raw text.  Control
+    characters are ``\\uXXXX`` escapes; everything else, astral code
+    points included, is written as is."""
+    out = []
+    for ch in s:
+        if ch in "'\\":
+            out.append("\\" + ch)
+        elif ch == "$" or ch < " ":
+            out.append(f"\\u{ord(ch):04x}")
+        else:
+            out.append(ch)
+    return "'" + "".join(out) + "'"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+#: a typed NULL in SQL text
+_NULL_STRING = "CAST(NULL AS STRING)"
+
+
+def _string_field(x: Any) -> Column:
+    if isinstance(x, Column):
+        return x.cast("string")
+    if x is None:
+        return F.expr(_NULL_STRING)
+    return F.lit(x) if isinstance(x, str) else F.lit(x).cast("string")
+
+
 def term_struct(k: Any, v: Any, dt: Any = None, lg: Any = None) -> Column:
-    as_col = lambda x, alias: (  # noqa: E731
-        (x if isinstance(x, Column) else F.lit(x)).cast("string").alias(alias)
-    )
-    return F.struct(as_col(k, "k"), as_col(v, "v"), as_col(dt, "dt"), as_col(lg, "lg"))
+    """The flat term struct ``(k, v, dt, lg)`` as one ``named_struct``;
+    each field is a Column (cast to string) or a Python constant.  A term
+    of string/None constants is one SQL expression."""
+    fields = (k, v, dt, lg)
+    if all(x is None or isinstance(x, str) for x in fields):
+        return F.expr("named_struct({})".format(", ".join(
+            f"{sql_string(name)}, "
+            + (_NULL_STRING if x is None else sql_string(x))
+            for name, x in zip(TERM_FIELDS, fields))))
+    args: list[Column] = []
+    for name, x in zip(TERM_FIELDS, fields):
+        args.extend((F.lit(name), _string_field(x)))
+    return F.named_struct(*args)
 
 
 def iri_term(v: Any) -> Column:
@@ -154,21 +206,28 @@ def _cross_fn(arr: Column):
     return outer
 
 
-def runtime_curie_expand(col: Column, namespaces: dict[str, str]) -> Column:
+def namespace_map(namespaces: dict[str, str]) -> Optional[Column]:
+    """The spec namespaces as one ``map(prefix, base, ...)`` literal
+    Column (None when there are none).  Built once per compile and held
+    by the compile context."""
+    if not namespaces:
+        return None
+    pairs = ", ".join(f"{sql_string(p)}, {sql_string(base)}"
+                      for p, base in namespaces.items())
+    return F.expr(f"map({pairs})")
+
+
+def runtime_curie_expand(col: Column, ns_map: Optional[Column]) -> Column:
     """Expand a (possibly) CURIE string against the spec namespaces, JVM-side.
 
     Compile-time constant folding handles the common case; this covers
     datatype suffixes carrying a templated/non-constant CURIE
-    (pattern.py:13-19, 58-60).
+    (pattern.py:13-19, 58-60).  ``ns_map`` is ``namespace_map``'s Column.
     """
     curie_rx = r"(?U)^([_A-Za-z][\w\-\.]*):([\w\-\.]+)$"
     prefix = F.regexp_extract(col, curie_rx, 1)
     local = F.regexp_extract(col, curie_rx, 2)
-    if namespaces:
-        pairs: list[Column] = []
-        for p, base in namespaces.items():
-            pairs.extend([F.lit(p), F.lit(base)])
-        ns_map = F.create_map(*pairs)
+    if ns_map is not None:
         expanded = F.concat(ns_map[prefix], local)
     else:
         expanded = F.lit(None).cast("string")
@@ -178,7 +237,7 @@ def runtime_curie_expand(col: Column, namespaces: dict[str, str]) -> Column:
 
 
 def wrap_native_string(col: Column, pattern_type: str | None,
-                       namespaces: dict[str, str]) -> Column:
+                       ns_map: Optional[Column]) -> Column:
     """Runtime lang/datatype re-parse of a result string (pattern.py:49-65).
 
     Returns a term struct, or NULL when a langstring/datatype-shaped template
@@ -188,7 +247,7 @@ def wrap_native_string(col: Column, pattern_type: str | None,
     lang_tag = F.regexp_extract(col, LANGSTRING_RX_JAVA, 2)
     dt_body = F.regexp_extract(col, DATATYPE_RX_JAVA, 1)
     dt_raw = F.regexp_extract(col, DATATYPE_RX_JAVA, 2)
-    dt_iri = runtime_curie_expand(dt_raw, namespaces)
+    dt_iri = runtime_curie_expand(dt_raw, ns_map)
     null_term = F.lit(None).cast(
         "struct<k:string,v:string,dt:string,lg:string>"
     )
@@ -206,7 +265,7 @@ def wrap_native_string(col: Column, pattern_type: str | None,
 
 
 def to_terms(ve: ValueExpr, pattern_type: str | None,
-             namespaces: dict[str, str],
+             ns_map: Optional[Column],
              suffix_free: bool = False) -> ValueExpr:
     """Finalize a value expr to term struct(s).
 
@@ -244,7 +303,7 @@ def to_terms(ve: ValueExpr, pattern_type: str | None,
         return replace(out, form="term")
 
     out = ve.map_elements(
-        lambda c: wrap_native_string(c.cast("string"), pattern_type, namespaces)
+        lambda c: wrap_native_string(c.cast("string"), pattern_type, ns_map)
     )
     return replace(out, form="term")
 

@@ -14,6 +14,7 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -202,119 +203,122 @@ def run_pipeline(
     # from a driver thread so its jobs back-fill the cluster while the
     # extract+link pass runs (guide §2.6 — overlap independent jobs).
     # Fused mode only: the checkpointed path re-reads stages from parquet
-    # and resumability bookkeeping stays strictly sequential.
+    # and resumability bookkeeping stays strictly sequential.  The pool
+    # is shut down however the run ends, so a failing stage leaves no
+    # worker thread behind it submitting jobs.
     mapping_fut = None
-    if workdir is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _pool = ThreadPoolExecutor(max_workers=2)
-        mapping_fut = _pool.submit(
-            lambda: canonical_mapping(sameas_edges_from_aliases(aliases)))
-
-    extracted = runner.run(
-        "extract",
-        lambda: with_extracted_text(pages).select(
-            "url", "warc_ts",
-            F.col("extracted_text").alias("text"), "lang",
-        ),
-        fingerprint=fp,
-    )
-    if prefilter:
-        # corpus hygiene (quality verdict + canonical-URL dedup) BEFORE
-        # linking/emission: everything downstream shuffles strictly less;
-        # off by default so the headline bench measures the engine, not
-        # the filter policy
-        from rdf_mapper_spark.pipeline.prefilter import prefilter_pages
+    pool = ThreadPoolExecutor(max_workers=2) if workdir is None else None
+    try:
+        if pool is not None:
+            mapping_fut = pool.submit(
+                lambda: canonical_mapping(sameas_edges_from_aliases(aliases)))
 
         extracted = runner.run(
-            "prefilter", lambda: prefilter_pages(extracted),
+            "extract",
+            lambda: with_extracted_text(pages).select(
+                "url", "warc_ts",
+                F.col("extracted_text").alias("text"), "lang",
+            ),
             fingerprint=fp,
         )
-    # fused mode: the extraction output feeds BOTH the page-triple
-    # branch and the linking branch — persist it once (checkpointed mode
-    # reads it back from parquet, already cheap to rescan); same for the
-    # link table, consumed by the mention-triple and entity-dictionary
-    # branches.  No materialization barrier before the final job: its
-    # concurrent union branches populate the caches through the block
-    # manager's per-partition locks (a second task needing an
-    # in-progress partition waits for it instead of recomputing), so the
-    # extract+link pass pipelines INTO the emission/dedup job — measured
-    # ~2 s faster at 100k pages than counting links first, identical
-    # output.  The page/link counts afterwards are pure cache scans.
-    n_pages = n_links = None
-    if workdir is None:
-        extracted = extracted.persist()
-    links = runner.run(
-        "link", lambda: link_entities(extracted, aliases), fingerprint=fp
-    )
-    warm_fut = None
-    if workdir is None:
-        links = links.persist()
-        if _WARM_OVERLAP:
-            # populate the extract+link caches from a driver thread while
-            # THIS thread compiles the three emission specs (~2 s of pure
-            # py4j/driver work during which the cluster would otherwise
-            # sit idle — guide §2.6, overlap independent work).  The
-            # final job's branches then read (mostly) populated caches
-            # through the block manager's per-partition locks, and the
-            # link-count metric is this job's result instead of a
-            # separate cache scan.
-            warm_fut = _pool.submit(links.count)
-    # ONE build_quads_split call feeds both stage lambdas: each call
-    # compiles all three mapping specs to Column plans (~0.6 s of pure
-    # driver/py4j work per engine), and the two runner stages previously
-    # re-ran it — six engine compiles per invocation, profiled as a
-    # ~3.7 s driver gap before the first emission job.  The lazy closure
-    # keeps checkpoint-resume semantics: a stage restored from parquet
-    # never triggers the compile.
-    _split: list = []
+        if prefilter:
+            # corpus hygiene (quality verdict + canonical-URL dedup) BEFORE
+            # linking/emission: everything downstream shuffles strictly less;
+            # off by default so the headline bench measures the engine, not
+            # the filter policy
+            from rdf_mapper_spark.pipeline.prefilter import prefilter_pages
 
-    def _quads_split():
-        if not _split:
-            _split.append(build_quads_split(extracted, links))
-        return _split[0]
+            extracted = runner.run(
+                "prefilter", lambda: prefilter_pages(extracted),
+                fingerprint=fp,
+            )
+        # fused mode: the extraction output feeds BOTH the page-triple
+        # branch and the linking branch — persist it once (checkpointed mode
+        # reads it back from parquet, already cheap to rescan); same for the
+        # link table, consumed by the mention-triple and entity-dictionary
+        # branches.  No materialization barrier before the final job: its
+        # concurrent union branches populate the caches through the block
+        # manager's per-partition locks (a second task needing an
+        # in-progress partition waits for it instead of recomputing), so the
+        # extract+link pass pipelines INTO the emission/dedup job — measured
+        # ~2 s faster at 100k pages than counting links first, identical
+        # output.  The page/link counts afterwards are pure cache scans.
+        n_pages = n_links = None
+        if workdir is None:
+            extracted = extracted.persist()
+        links = runner.run(
+            "link", lambda: link_entities(extracted, aliases), fingerprint=fp
+        )
+        warm_fut = None
+        if workdir is None:
+            links = links.persist()
+            if _WARM_OVERLAP:
+                # populate the extract+link caches from a driver thread while
+                # THIS thread compiles the three emission specs (~2 s of pure
+                # py4j/driver work during which the cluster would otherwise
+                # sit idle — guide §2.6, overlap independent work).  The
+                # final job's branches then read (mostly) populated caches
+                # through the block manager's per-partition locks, and the
+                # link-count metric is this job's result instead of a
+                # separate cache scan.
+                warm_fut = pool.submit(links.count)
+        # ONE build_quads_split call feeds both stage lambdas: each call
+        # compiles all three mapping specs to Column plans (~0.6 s of pure
+        # driver/py4j work per engine), and the two runner stages previously
+        # re-ran it — six engine compiles per invocation, profiled as a
+        # ~3.7 s driver gap before the first emission job.  The lazy closure
+        # keeps checkpoint-resume semantics: a stage restored from parquet
+        # never triggers the compile.
+        _split: list = []
 
-    page_q = runner.run(
-        "triples_pages", lambda: _quads_split()[0], fingerprint=fp,
-    )
-    dyn_q = runner.run(
-        "triples_links", lambda: _quads_split()[1], fingerprint=fp,
-    )
+        def _quads_split():
+            if not _split:
+                _split.append(build_quads_split(extracted, links))
+            return _split[0]
 
-    def canonical() -> DataFrame:
-        # only the entity-linked half can contain rewritable IRIs or
-        # duplicates; the page half is distinct by construction and joins
-        # the output untouched (no rewrite joins, no dedup shuffle)
-        if mapping_fut is not None:
-            mapping = mapping_fut.result()
-            _pool.shutdown(wait=False)
-        else:
-            mapping = canonical_mapping(sameas_edges_from_aliases(aliases))
-        rewritten = rewrite_canonical(dyn_q, mapping)
-        from rdf_mapper_spark.quads import union_quads
-
-        return union_quads(
-            [page_q, dedup_quads(rewritten, salt=dedup_salt)]
+        page_q = runner.run(
+            "triples_pages", lambda: _quads_split()[0], fingerprint=fp,
+        )
+        dyn_q = runner.run(
+            "triples_links", lambda: _quads_split()[1], fingerprint=fp,
         )
 
-    final = runner.run("canonical", canonical, fingerprint=fp)
+        def canonical() -> DataFrame:
+            # only the entity-linked half can contain rewritable IRIs or
+            # duplicates; the page half is distinct by construction and joins
+            # the output untouched (no rewrite joins, no dedup shuffle)
+            if mapping_fut is not None:
+                mapping = mapping_fut.result()
+            else:
+                mapping = canonical_mapping(sameas_edges_from_aliases(aliases))
+            rewritten = rewrite_canonical(dyn_q, mapping)
+            from rdf_mapper_spark.quads import union_quads
 
-    n_triples = final.count()
-    if workdir is None:
-        # link count from the overlapped warm job (else a cache scan);
-        # page count is a pure cache scan either way
-        n_links = warm_fut.result() if warm_fut is not None \
-            else links.count()
-        n_pages = extracted.count()
-    if materialize and workdir:
-        write_graph_tables(final, f"{workdir}/graph_tables")
-    # release this run's caches: callers consume the metrics (and the
-    # materialized tables), not the DataFrames — leaked cache entries would
-    # also be silently reused by any later identical-plan run, corrupting
-    # benchmarks
-    if workdir is None:
-        extracted.unpersist()
-        links.unpersist()
+            return union_quads(
+                [page_q, dedup_quads(rewritten, salt=dedup_salt)]
+            )
+
+        final = runner.run("canonical", canonical, fingerprint=fp)
+
+        n_triples = final.count()
+        if workdir is None:
+            # link count from the overlapped warm job (else a cache scan);
+            # page count is a pure cache scan either way
+            n_links = warm_fut.result() if warm_fut is not None \
+                else links.count()
+            n_pages = extracted.count()
+        if materialize and workdir:
+            write_graph_tables(final, f"{workdir}/graph_tables")
+        # release this run's caches: callers consume the metrics (and the
+        # materialized tables), not the DataFrames — leaked cache entries
+        # would also be silently reused by any later identical-plan run,
+        # corrupting benchmarks
+        if workdir is None:
+            extracted.unpersist()
+            links.unpersist()
+    finally:
+        if pool is not None:
+            pool.shutdown(cancel_futures=True)
     wall = time.time() - t0
     return {
         "triples": n_triples,

@@ -82,3 +82,10 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def test_query_registry_order_is_neutral():
+    # by family (the name's first word), then alphabetically: the order
+    # carries no choice of which queries a sample should reach first
+    names = list(entry_mod.queries())
+    assert names == sorted(names, key=lambda n: (n.split("_")[0], n))

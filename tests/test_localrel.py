@@ -2,6 +2,7 @@
 createDataFrame, no Python-worker scan tax (r6 optimization)."""
 
 import pyspark.sql.types as T
+import pytest
 from pyspark.sql import functions as F
 
 from rdf_mapper_spark.localrel import local_df
@@ -93,3 +94,36 @@ def test_json_unsafe_types_fall_back(spark):
     got = local_df(spark, rows, schema).collect()
     want = spark.createDataFrame(rows, schema).collect()
     assert got == want
+
+
+def test_name_needing_quotes_matches_createdataframe(spark):
+    # a field name a DDL schema string cannot carry unquoted
+    schema = T.StructType([T.StructField("a b", T.StringType()),
+                           T.StructField("c", T.IntegerType())])
+    rows = [("x", 1), (None, 2)]
+    got = local_df(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.columns == want.columns == ["a b", "c"]
+    assert got.collect() == want.collect()
+
+
+def test_duplicate_names_keep_every_value(spark):
+    # one JSON object per row would keep only the last duplicate key
+    schema = T.StructType([T.StructField("a", T.StringType()),
+                           T.StructField("a", T.StringType())])
+    got = [tuple(r) for r in local_df(spark, [("x", "y")], schema).collect()]
+    want = [tuple(r) for r in
+            spark.createDataFrame([("x", "y")], schema).collect()]
+    assert got == want == [("x", "y")]
+
+
+def test_out_of_range_int_raises(spark):
+    rows = [(2**40,)]
+    with pytest.raises(ValueError):
+        spark.createDataFrame(rows, "a int").collect()
+    with pytest.raises(ValueError):
+        local_df(spark, rows, "a int").collect()
+    # in range at the edges stays exact
+    edge = [(2**31 - 1,), (-2**31,)]
+    assert (local_df(spark, edge, "a int").collect()
+            == spark.createDataFrame(edge, "a int").collect())

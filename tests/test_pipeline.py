@@ -1,7 +1,10 @@
 """Web-scale pipeline tests at toy scale: extraction byte-identity,
 linking, connected-components canonicalization, checkpoint resume."""
 
+import threading
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from rdf_mapper_spark.pipeline.canonicalize import (
@@ -191,3 +194,18 @@ def test_make_pages_hot_entity_plant(spark):
                        hot_entity="Entity1")
     assert hot.select("url", "text").exceptAll(
         again.select("url", "text")).count() == 0
+
+
+def test_failed_stage_leaves_no_pool_thread(spark):
+    """A fused run whose extraction raises must shut its canonical-mapping
+    thread pool down: no ThreadPoolExecutor worker may outlive the call."""
+    def pool_threads():
+        return {t for t in threading.enumerate()
+                if t.name.startswith("ThreadPoolExecutor-")}
+
+    before = pool_threads()
+    no_html = spark.createDataFrame([("http://p/1", "2020")],
+                                    "url string, warc_ts string")
+    with pytest.raises(Exception, match="html"):
+        run_pipeline(spark, no_html, make_alias_dict(spark, n_entities=5))
+    assert not (pool_threads() - before)
