@@ -43,16 +43,23 @@ class Backlink:
 
 
 @dataclass
-class AutoCVUse:
-    """One autoCV(...) call site, collected for the side aggregation that
-    emits concept + scheme quads from distinct labels (R9, the engine's only
-    cross-row aggregation besides final dedup)."""
+class Scope:
+    """The rows one resource instantiation fires on, in the spec's single
+    quad lineage (resources.Lineage).  ``level`` counts the map_to
+    explodes above those rows (0: input rows); ``fired`` names the
+    boolean lineage column that flags them and ``rows`` is the same flag
+    as a Column over the context's frame (both None: every row of the
+    frame fires).  ``subject`` names the subject column (None for a
+    literal resource), ``subject_col`` is that subject over the context's
+    frame (NULL on the rows that do not fire) and ``kind`` is its term
+    kind."""
 
-    cv_name: str
-    cv_type: Optional[str]
-    label_col: Column
-    source_df: DataFrame
-    graph: Optional[str]
+    level: int = 0
+    fired: Optional[str] = None
+    rows: Optional[Column] = None
+    subject: Optional[str] = None
+    subject_col: Optional[Column] = None
+    kind: str = "iri"
 
 
 @dataclass
@@ -60,9 +67,13 @@ class CompileCtx:
     spec: MappingSpec
     df: DataFrame
     constants: dict[str, Any]
-    columns: dict[str, tuple[Column, str]]  # name -> (col, simple dtype)
+    # name -> (col, simple dtype); col None: the input column of that name
+    columns: dict[str, tuple[Optional[Column], str]]
     backlinks: dict[str, Backlink] = field(default_factory=dict)
-    autocv_uses: list[AutoCVUse] = field(default_factory=list)
+    # the spec's quad lineage (resources.Lineage) every resource emits
+    # into, and the rows this context's resource fires on
+    lineage: Any = None
+    scope: Scope = field(default_factory=Scope)
     warnings: list[str] = field(default_factory=list)
     # (label, DataFrame of offending rows) for required-property violations
     # (F4/K6): counted lazily by MapperEngine.count_errors()
@@ -85,10 +96,10 @@ class CompileCtx:
     # distinct key across ALL call sites.  Shared through child().
     reconcile_cache: dict = field(default_factory=dict)
     # huge-dictionary reconcile lookups register (key_col, resolved_df,
-    # alias) here; _compile_resource_body left-broadcast-joins them onto
-    # the emission frame.  Shared only with children over the SAME
-    # DataFrame (column-name resolution must target the frame the body
-    # will join); `joinable` marks contexts where that application is
+    # alias) here; the lineage left-broadcast-joins them onto the frame of
+    # their level.  Shared only with children over the SAME DataFrame
+    # (column-name resolution must target the frame the lineage will
+    # join); `joinable` marks contexts where that application is
     # guaranteed to happen.
     pending_joins: list = field(default_factory=list)
     joinable: bool = False
@@ -107,6 +118,11 @@ class CompileCtx:
             self.jvm_consts["ns_map"] = namespace_map(self.namespaces)
         return self.jvm_consts["ns_map"]
 
+    def rows_df(self) -> DataFrame:
+        """The frame's rows this context's resource fires on."""
+        rows = self.scope.rows
+        return self.df if rows is None else self.df.where(rows)
+
     def has_var(self, name: str) -> bool:
         if name in self.columns:
             return True
@@ -115,7 +131,8 @@ class CompileCtx:
     def resolve(self, name: str) -> ValueExpr:
         if name in self.columns:
             col, dtype = self.columns[name]
-            return ValueExpr(col, is_array=False, form="native", dtype=dtype)
+            return ValueExpr(self._input_col(name) if col is None else col,
+                             is_array=False, form="native", dtype=dtype)
         if not self.shielded and name in self.constants:
             v = self.constants[name]
             if isinstance(v, bool):
@@ -136,21 +153,31 @@ class CompileCtx:
         if kind == "lit":
             return value
         if value in self.columns:
-            return self.columns[value][0]
+            return self.resolve(value).col
         if not self.shielded and value in self.constants:
             return self.constants[value]
         return value
 
-    def child(self, df: DataFrame, columns: dict[str, tuple[Column, str]],
+    def _input_col(self, name: str) -> Column:
+        """The input column ``name``, built on first use per compile."""
+        key = ("col", name)
+        if key not in self.jvm_consts:
+            self.jvm_consts[key] = quoted_col(name)
+        return self.jvm_consts[key]
+
+    def child(self, df: DataFrame,
+              columns: dict[str, tuple[Optional[Column], str]],
               extra_constants: dict[str, Any] | None = None,
-              shielded: bool = False) -> "CompileCtx":
+              shielded: bool = False,
+              scope: Optional[Scope] = None) -> "CompileCtx":
         consts = {} if shielded else dict(self.constants)
         if extra_constants:
             consts.update(extra_constants)
         same_df = df is self.df
         out = CompileCtx(
             spec=self.spec, df=df, constants=consts, columns=columns,
-            backlinks=self.backlinks, autocv_uses=self.autocv_uses,
+            backlinks=self.backlinks, lineage=self.lineage,
+            scope=self.scope if scope is None else scope,
             warnings=self.warnings, error_plans=self.error_plans,
             side_quad_rows=self.side_quad_rows,
             run_timestamp=self.run_timestamp, shielded=shielded,
@@ -168,8 +195,7 @@ def quoted_col(name: str) -> Column:
     return F.col(sql_ident(name))
 
 
-def df_columns(df: DataFrame) -> dict[str, tuple[Column, str]]:
-    return {
-        name: (quoted_col(name), simple_dtype(dtype))
-        for name, dtype in df.dtypes
-    }
+def df_columns(df: DataFrame) -> dict[str, tuple[Optional[Column], str]]:
+    """The input columns by name; the Column is None and is built on
+    first resolve, so unreferenced columns cost no py4j traffic."""
+    return {name: (None, simple_dtype(dtype)) for name, dtype in df.dtypes}

@@ -158,8 +158,12 @@ def register_udf(name: str, pyfn: Callable, return_type) -> None:
         def run(s: pd.Series) -> pd.Series:
             return s.map(lambda x: None if x is None else pyfn(x, *lit_args))
 
+        # Python UDFs run ahead of any CASE, on every row of the frame;
+        # the rows the scope does not fire on pass NULL (never calls pyfn)
+        rows = cctx.scope.rows
+        col = ve.col if rows is None else F.when(rows, ve.col)
         is_arr = isinstance(return_type, ArrayType)
-        return ValueExpr(run(ve.col), is_array=ve.is_array or is_arr,
+        return ValueExpr(run(col), is_array=ve.is_array or is_arr,
                          form="native", dtype=None)
 
     register(name, compile_fn)
@@ -386,7 +390,8 @@ def _map_by(ve: ValueExpr, mapping_name: str, cctx) -> ValueExpr:
         )
     rid = cctx.constants.get("$resourceID", "?")
     cctx.error_plans.append(
-        (f"{rid}.map_by({mapping_name}):no-mapping", cctx.df.where(miss))
+        (f"{rid}.map_by({mapping_name}):no-mapping",
+         cctx.rows_df().where(miss))
     )
 
     out = ve.map_elements(casefn)

@@ -195,7 +195,7 @@ class _GuardTranslator:
                 raise _Untranslatable("non-constant locals() membership")
             name = node.left.value
             if name in self.cctx.columns:
-                present = self.cctx.columns[name][0].isNotNull()
+                present = self.cctx.resolve(name).col.isNotNull()
             elif self.cctx.has_var(name):
                 present = F.lit(True)
             else:
@@ -273,7 +273,7 @@ def _guard_fallback_udf(source: str, cctx) -> Column:
     consts = {
         n: v for n, v in cctx.constants.items() if not callable(v)
     } if not cctx.shielded else {}
-    cols = [cctx.columns[n][0] for n in names]
+    cols = [cctx.resolve(n).col for n in names]
     code = compile(source, "<guard>", "eval")
 
     @F.pandas_udf(BooleanType())

@@ -1,19 +1,19 @@
-"""Resource templates -> quad-DataFrame plans.
+"""Resource templates -> one quad lineage per spec.
 
-Each resource compiles to ONE projection + ONE `explode` over the (filtered)
-input: every property's term expression is packed into an array of quad
-structs which is exploded once — so a resource with 20 properties costs a
-single pass, entirely inside whole-stage codegen, instead of 20 unioned
-selects.  Fan-out constructs (map_to/smap_to over nested arrays) compile to
-`posexplode` sub-plans; autoCV registers a distinct-label side aggregation;
-auto-declared vocabulary folds to constants gated on "resource fired at
-least once".
+Every resource of a spec emits from one projection + ONE `explode` over
+the input (`Lineage`): each resource adds its fired flag and subject,
+then its term columns (computed only on the rows it fires on, so its
+filter still guards them), and every quad is a CASE over those names in
+one per-row array, so the input is scanned once and a resource with 20
+properties costs no extra pass.  map_to/smap_to fan-outs are one
+more level of the same lineage (a `posexplode_outer` over the zipped
+sources); auto-declared vocabulary and autoCV concept/scheme quads are
+per-row constants gated on the rows that fire, which the final set-dedup
+collapses.
 
 Plan building is py4j traffic (one round trip per `Column` method or `F.*`
 call), so the emission side is SQL text: the projection names every input
-column, and each quad array over those names is one `selectExpr`
-(`_emit_quads`, `_quad_sql`).  Constant quads are one JSON string literal
-(`localrel.json_rows`) behind the firing gate.
+column, and the quad array over those names is one `selectExpr`.
 
 Reference semantics: template_support.py:205-396 (process_resource_spec /
 process_property_value), 431-604 (map_to/smap_to/map_by/reconcile/autoCV).
@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import hashlib
 from dataclasses import replace
+from functools import reduce
 from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -31,10 +32,10 @@ from pyspark.sql import functions as F
 from rdf_mapper_spark import pyeval
 from rdf_mapper_spark.compiler import guards
 from rdf_mapper_spark.compiler.context import (
-    AutoCVUse,
     Backlink,
     CompileCtx,
     MissingVar,
+    Scope,
 )
 from rdf_mapper_spark.compiler.functions import (
     EmbeddedFanout,
@@ -54,8 +55,7 @@ from rdf_mapper_spark.compiler.values import (
     term_struct,
     to_terms,
 )
-from rdf_mapper_spark.localrel import json_rows
-from rdf_mapper_spark.quads import QUAD_FIELDS, quad_schema
+from rdf_mapper_spark.quads import QUAD_FIELDS
 from rdf_mapper_spark.pyfuncs import normalize as py_normalize
 from rdf_mapper_spark.spec import (
     OWL_CLASS,
@@ -526,126 +526,88 @@ def filters_condition(rs: ResourceSpec, cctx: CompileCtx) -> Optional[Column]:
 # ---------------------------------------------------------------------------
 def _register_vocab(cctx: CompileCtx, kind: str, name: str, _id: str,
                     comment: str | None, type_iri: str) -> None:
-    key = f"{kind}#{name}"
-    store = cctx.constants.setdefault("__vocab__", {})
-    if key in cctx.constants.get("__vocab_seen__", set()):
-        return
-    cctx.constants.setdefault("__vocab_seen__", set()).add(key)
-    rows = store.setdefault("rows", [])
-    rows.append((None, "iri", _id, RDF_TYPE, "iri", type_iri, None, None))
-    rows.append((None, "iri", _id, RDFS_LABEL, "literal", name, None, None))
+    """Declare ``_id`` (an owl:Class / rdf:Property) on the rows the
+    resource of ``cctx`` fires on.
+
+    The quads are constants in the resource's constant ``@graph`` (NULL,
+    the default graph, otherwise).  A row-templated graph also gets NULL:
+    the reference declares in the graph of the first row that fires,
+    which depends on row order.  Each (key, graph) is emitted once, gated
+    on the OR of the fired flags of every resource that declares it."""
+    g = cctx.constants.get("$graph_const")
+    rows = [(g, "iri", _id, RDF_TYPE, "iri", type_iri, None, None),
+            (g, "iri", _id, RDFS_LABEL, "literal", name, None, None)]
     if comment is not None:
-        rows.append((None, "iri", _id, RDFS_COMMENT, "literal", comment,
+        rows.append((g, "iri", _id, RDFS_COMMENT, "literal", comment,
                      None, None))
-
-
-def _drain_vocab(cctx: CompileCtx) -> list[tuple]:
-    store = cctx.constants.get("__vocab__", {})
-    rows = store.get("rows", [])
-    store["rows"] = []
-    return rows
-
-
-def _const_quads_gated(df: DataFrame, rows: list[tuple]) -> DataFrame:
-    """Emit constant quads iff ``df`` has at least one row.
-
-    The gate keeps reference behavior: vocabulary/schemes appear only when
-    the resource actually fired (template_support.py:408-424). ``limit(1)``
-    terminates the scan early, so the gate is O(first matching row).  The
-    rows themselves are one JSON string literal (`localrel.json_rows`).
-    """
-    arr = json_rows(rows, quad_schema())
-    if arr is None:
-        raise TypeError("constant quad fields must be strings or None")
-    return df.limit(1).select(F.inline(arr))
+    cctx.lineage.declare(cctx.scope, (f"{kind}#{name}", g), rows)
 
 
 # ---------------------------------------------------------------------------
 # autoCV (template_support.py:575-604) and reconcile (482-530)
 # ---------------------------------------------------------------------------
 def compile_autocv(ve: ValueExpr, args: list[Any], cctx: CompileCtx) -> ValueExpr:
+    """Concept IRIs of the labels; each row that fires with a label also
+    emits the concept and scheme quads, which the final set-dedup
+    collapses to one copy per distinct label (the reference's only
+    cross-row aggregation, R9)."""
     cv_name = str(args[0]) if args else str(cctx.constants.get("$prop"))
     cv_type = str(args[1]) if len(args) > 1 else None
     base = f"{cctx.constants.get('$datasetBase')}/def/{cv_name}"
     if ve.is_array and cv_type == "hash":
         raise ValueError("autoCV(hash) over multi-values: explode first")
 
-    label_scalar = ve.col if not ve.is_array else None
-
-    def concept_iri(c: Column) -> Column:
+    def concept(c: Column) -> Column:
         label = c.cast("string")
         local = (
             sha1_b32hex_col(label) if cv_type == "hash" else normalize_col(label)
         )
-        return F.when(
-            label.isNotNull() & (label != ""),
-            iri_term(F.concat(F.lit(base + "/"), local)),
-        )
+        return F.when(label.isNotNull() & (label != ""),
+                      F.concat(F.lit(base + "/"), local))
 
-    out = ve.map_elements(concept_iri)
-    cctx.autocv_uses.append(
-        AutoCVUse(
-            cv_name=cv_name,
-            cv_type=cv_type,
-            label_col=(
-                label_scalar.cast("string")
-                if label_scalar is not None
-                else F.explode(ve.col).cast("string")
-            ),
-            source_df=cctx.df,
-            graph=cctx.constants.get("$graph_const"),
-        )
-    )
-    return replace(out, form="term")
+    def concept_term(c: Column) -> Column:
+        iri = concept(c)
+        return F.when(iri.isNotNull(), iri_term(iri))
+
+    lineage, scope = cctx.lineage, cctx.scope
+    g = cctx.constants.get("$graph_const")
+    g = "NULL" if g is None else sql_string(g)
+    if ve.is_array:
+        pairs = lineage.column(scope, F.transform(ve.col, lambda c: F.struct(
+            c.cast("string").alias("l"), concept(c).alias("c"))))
+        quads = _autocv_quads(g, cv_name, base + "_scheme", "__x.c", "__x.l")
+        lineage.arrays.append((cctx.scope, lambda gate: (
+            f"coalesce(flatten(transform({pairs}, __x -> "
+            f"if({_and_sql(gate, '__x.c IS NOT NULL')}, {quads}, array()))), "
+            "array())")))
+    else:
+        label = lineage.column(scope, ve.col.cast("string"))
+        iri = lineage.column(scope, concept(ve.col))
+        quads = _autocv_quads(g, cv_name, base + "_scheme", iri, label)
+        lineage.arrays.append((cctx.scope, lambda gate: (
+            f"if({_and_sql(gate, f'{iri} IS NOT NULL')}, {quads}, array())")))
+    return replace(ve.map_elements(concept_term), form="term")
 
 
-def autocv_side_quads(use: AutoCVUse, spec: MappingSpec,
-                      dataset_base: str) -> DataFrame:
-    """Distinct labels -> concept quads; scheme quads gated on >=1 label.
-
-    The reference's only true cross-row aggregation (R9): here a
-    `distinct()` (map-side partial aggregation; labels are low-cardinality
-    so the shuffle is tiny) followed by constant-per-label quad explosion.
-    """
-    base = f"{dataset_base}/def/{use.cv_name}"
-    scheme_id = base + "_scheme"
-    g = use.graph
-    g_sql = "NULL" if g is None else sql_string(g)
-    labels = (
-        use.source_df.select(use.label_col.alias("label"))
-        .where(F.col("label").isNotNull() & (F.col("label") != ""))
-        .distinct()
-    )
-    local = (
-        sha1_b32hex_col(F.col("label"))
-        if use.cv_type == "hash"
-        else normalize_col(F.col("label"))
-    )
-    concept = F.concat(F.lit(base + "/"), local)
-    c, label = sql_ident("__c"), sql_ident("label")
+def _autocv_quads(g: str, cv_name: str, scheme_id: str, concept: str,
+                  label: str) -> str:
+    """SQL array of one label's concept quads and its scheme's quads."""
     scheme = sql_string(scheme_id)
-    quads = [
-        _quad_fields_sql(g_sql, sql_string("iri"), s, sql_string(p),
+    dct = "http://purl.org/dc/terms/"
+    return "array({})".format(", ".join(
+        _quad_fields_sql(g, sql_string("iri"), s, sql_string(p),
                          sql_string(ok), o, "NULL", "NULL")
         for s, p, ok, o in (
-            (c, RDF_TYPE, "iri", sql_string(SKOS + "Concept")),
-            (c, SKOS + "prefLabel", "literal", label),
-            (c, SKOS + "inScheme", "iri", scheme),
-            (c, SKOS + "topConceptOf", "iri", scheme),
-            (scheme, SKOS + "hasTopConcept", "iri", c),
-        )
-    ]
-    concept_quads = labels.select("label", concept.alias("__c")).selectExpr(
-        f"explode(array({', '.join(quads)})) AS q").selectExpr("q.*")
-    scheme_rows = [
-        (g, "iri", scheme_id, RDF_TYPE, "iri", SKOS + "ConceptScheme", None, None),
-        (g, "iri", scheme_id, "http://purl.org/dc/terms/title", "literal",
-         use.cv_name, None, None),
-        (g, "iri", scheme_id, "http://purl.org/dc/terms/description", "literal",
-         f"Automatically generated concept scheme {use.cv_name}", None, None),
-    ]
-    scheme_quads = _const_quads_gated(labels, scheme_rows)
-    return concept_quads.unionByName(scheme_quads)
+            (concept, RDF_TYPE, "iri", sql_string(SKOS + "Concept")),
+            (concept, SKOS + "prefLabel", "literal", label),
+            (concept, SKOS + "inScheme", "iri", scheme),
+            (concept, SKOS + "topConceptOf", "iri", scheme),
+            (scheme, SKOS + "hasTopConcept", "iri", concept),
+            (scheme, RDF_TYPE, "iri", sql_string(SKOS + "ConceptScheme")),
+            (scheme, dct + "title", "literal", sql_string(cv_name)),
+            (scheme, dct + "description", "literal", sql_string(
+                f"Automatically generated concept scheme {cv_name}")),
+        )))
 
 
 def compile_reconcile(ve: ValueExpr, args: list[Any], cctx: CompileCtx) -> ValueExpr:
@@ -712,7 +674,7 @@ def compile_reconcile(ve: ValueExpr, args: list[Any], cctx: CompileCtx) -> Value
         key_el = (F.explode(ve.col).cast("string") if ve.is_array
                   else ve.col.cast("string"))
         keys_df = (
-            cctx.df.select(key_el.alias("key"))
+            cctx.rows_df().select(key_el.alias("key"))
             .where(F.col("key").isNotNull() & (F.col("key") != ""))
             .distinct()
         )
@@ -851,216 +813,187 @@ def _dict_lookup_udf(mapping: dict[str, str]):
 
 
 # ---------------------------------------------------------------------------
-# Resource compilation
+# The spec lineage: one projection per level + one generate
 # ---------------------------------------------------------------------------
-def spec_of(cctx: CompileCtx) -> MappingSpec:
-    return cctx.spec
+class Lineage:
+    """The one plan every resource of a spec emits its quads from.
 
+    Level 0 is the input rows.  Each deeper level is one
+    ``posexplode_outer(arrays_zip(..))`` over the map_to sources of the
+    level above (``__li{L}`` / ``__z{L}``), so a row with no elements
+    keeps one row with a NULL position.  A level is projected twice: its
+    heads (each scope's fired flag ``__f`` and subject ``__subj``, and the
+    map_to sources), then the columns resources add (``column``), each
+    computed only where its scope fires, so a filter still guards a cast
+    or a lookup as a Filter did.  (Python UDFs are evaluated ahead of any
+    CASE, on every row of the level; a plugin UDF gets NULL on the rows
+    its scope does not fire on.)  Resources register quads as SQL text over
+    those names: scalar terms in ``quads``, arrays of quads in ``arrays``,
+    constant vocabulary in ``vocab``.  ``build`` projects each level,
+    explodes one per-row quad array and drops NULL quads.  Each quad is
+    gated on its scope's fired flag and, above the last level, on the
+    first position of every explode below it, so it is emitted once per
+    row of its own level."""
 
-def compile_resource(rs: ResourceSpec, cctx: CompileCtx,
-                     graph_const: str | None = None) -> list[DataFrame]:
-    """Compile one resource template into quad DataFrames."""
-    consts = dict(cctx.constants)
-    consts["$resourceID"] = rs.name
-    scoped = cctx.child(cctx.df, dict(cctx.columns), consts)
-    scoped.constants["__vocab__"] = cctx.constants.setdefault("__vocab__", {})
-    scoped.constants["__vocab_seen__"] = cctx.constants.setdefault(
-        "__vocab_seen__", set()
-    )
+    def __init__(self, base: DataFrame) -> None:
+        self.base = base
+        # conditions of the top-level resources; the lineage keeps the
+        # rows that pass at least one when every resource has one
+        self.filters: list[Optional[Column]] = []
+        self.heads: list[list[Column]] = [[]]
+        self.cols: list[list[Column]] = [[]]
+        self.sources: list[list[str]] = [[]]
+        self.joins: list[list] = [[]]
+        # (scope, render): render(gate SQL) is a quad / an array of quads
+        self.quads: list[tuple[Scope, Any]] = []
+        self.arrays: list[tuple[Scope, Any]] = []
+        # (key, graph) -> (constant quad rows, declaring scopes)
+        self.vocab: dict[tuple, tuple[list, list[Scope]]] = {}
+        self._names: dict[str, int] = {}
+        self._emitted = 0
 
-    cond = filters_condition(rs, scoped)
-    fdf = scoped.df.filter(cond) if cond is not None else scoped.df
-    fcols = {k: v for k, v in scoped.columns.items()}
-    fctx = scoped.child(fdf, fcols, dict(scoped.constants))
-    fctx.constants["__vocab__"] = scoped.constants["__vocab__"]
-    fctx.constants["__vocab_seen__"] = scoped.constants["__vocab_seen__"]
+    def name(self, prefix: str) -> str:
+        n = self._names.get(prefix, 0)
+        self._names[prefix] = n + 1
+        return prefix + (str(n) if n else "")
 
-    # graph routing (R12): constant graph IRIs fold on the driver; a graph
-    # template referencing row variables (reference expands per row,
-    # template_support.py:284-287) compiles to a real `__g` column that the
-    # emission projections carry through
-    graph: str | Column | None = graph_const
-    if rs.graph:
-        gvars = parse_template(rs.graph).referenced_vars()
-        if any(v in fctx.columns for v in gvars):
-            gv = compile_uri(rs.graph, fctx, declare=False)
-            gcol = (F.element_at(F.array_compact(gv.col), 1)
-                    if gv.is_array else gv.col)
-            fdf = fdf.withColumn("__g", gcol.cast("string"))
-            fctx = fctx.child(fdf, dict(fctx.columns), dict(fctx.constants))
-            graph = F.col("__g")
+    def column(self, scope: Scope, col: Column,
+               name: Optional[str] = None) -> str:
+        """Project ``col`` at the scope's level, NULL on the rows the scope
+        does not fire on; returns its SQL identifier."""
+        name = name or self.name("__c")
+        if scope.fired:
+            col = F.when(F.col(scope.fired), col)
+        self.cols[scope.level].append(col.alias(name))
+        return sql_ident(name)
+
+    def _head(self, level: int, col: Column, prefix: str) -> str:
+        name = self.name(prefix)
+        self.heads[level].append(col.alias(name))
+        return name
+
+    def scope(self, level: int, rows: Optional[Column], kind: str = "iri",
+              subject: Optional[Column] = None, checked: bool = False
+              ) -> Scope:
+        """The rows of ``level`` a resource instantiation fires on: where
+        ``rows`` holds (None: every row) and its ``subject``, computed only
+        there, is not NULL (``checked``: the frame holds no other rows)."""
+        if subject is not None:
+            if rows is not None:
+                subject = F.when(rows, subject)
+            if not checked:
+                rows = subject.isNotNull()
+        fired = None if rows is None else self._head(level, rows, "__f")
+        subj = None if subject is None else self._head(level, subject,
+                                                       "__subj")
+        return Scope(level, fired, rows, subj, subject, kind)
+
+    def source(self, scope: Scope, col: Column) -> str:
+        """Register a map_to source array on the scope's rows (``[]``
+        elsewhere); its elements are the field of that name in
+        ``__z{level + 1}``."""
+        if scope.rows is not None:
+            col = F.when(scope.rows, col)
+        level = scope.level
+        name = self._head(level, F.coalesce(col, F.array()), "__src")
+        self.sources[level].append(name)
+        if len(self.cols) == level + 1:
+            for lists in (self.heads, self.cols, self.sources, self.joins):
+                lists.append([])
+        return name
+
+    def level_frame(self, frame: DataFrame, level: int,
+                    cols: list[Column] = (), sources: list[str] = (),
+                    keep: bool = True) -> DataFrame:
+        """``frame``, the rows of ``level``, with the level's heads and
+        ``cols`` projected (``keep``: next to its columns), exploded over
+        ``sources`` into the rows of ``level + 1``."""
+        if self.heads[level]:
+            frame = frame.select("*", *self.heads[level])
+        if cols:
+            frame = frame.select("*", *cols) if keep else frame.select(*cols)
+        if sources:
+            frame = frame.select("*", F.posexplode_outer(
+                F.arrays_zip(*sources)).alias(f"__li{level + 1}",
+                                              f"__z{level + 1}"))
+        return frame
+
+    def emit(self, scope: Scope, g: str, pred: Column, term: ValueExpr,
+             inverse: bool, subject: Optional[tuple[str, str]] = None
+             ) -> None:
+        """Quads (subject, pred, term) on the rows ``scope`` fires on;
+        ``subject`` is the (kind, column) SQL of another scope's subject
+        (a parent link), by default the scope's own."""
+        i = self._emitted
+        self._emitted += 1
+        t = self.column(scope, term.col, f"__t{i}")
+        p = self.column(scope, pred, f"__p{i}")
+        sk, s = subject or (sql_string(scope.kind), sql_ident(scope.subject))
+        if term.is_array:
+            self.arrays.append((scope, lambda gate: (
+                f"coalesce(transform({t}, __x -> "
+                f"{_quad_sql(gate, g, sk, s, p, '__x', inverse)}), array())")))
         else:
-            state = pyeval.EvalState(spec_of(fctx))
-            graph = pyeval.uri_expand(rs.graph, dict(fctx.constants), state)[0]
-            fctx.constants["$graph_const"] = graph
+            self.quads.append(
+                (scope, lambda gate: _quad_sql(gate, g, sk, s, p, t, inverse)))
 
-    if rs.pattern is not None:
-        # literal-resource templates only make sense embedded; top-level
-        # pattern resources produce no quads of their own
-        return []
+    def declare(self, scope: Scope, key: tuple, rows: list[tuple]) -> None:
+        self.vocab.setdefault(key, (rows, []))[1].append(scope)
 
-    return _compile_resource_body(rs, fctx, fdf, graph)
+    def _gate(self, scope: Scope) -> str:
+        conds = [sql_ident(scope.fired)] if scope.fired else []
+        conds += [f"coalesce({sql_ident(f'__li{m}')}, 0) = 0"
+                  for m in range(scope.level + 1, len(self.cols))]
+        return " AND ".join(conds)
 
-
-def _compile_resource_body(rs: ResourceSpec, fctx: CompileCtx, fdf: DataFrame,
-                           graph: str | None) -> list[DataFrame]:
-    spec = fctx.spec
-    out: list[DataFrame] = []
-
-    # ---- subject -----------------------------------------------------------
-    id_template = rs.prop_template("@id") or "<row>"
-    if id_template == "<_>":
-        subj_kind = "bnode"
-        subj_val = _skolem_bnode(rs.name, fctx)
-    else:
-        subj_kind = "iri"
-        sv = compile_uri(id_template, fctx, declare=False)
-        subj_val = (
-            F.element_at(F.array_compact(sv.col), 1)
-            if sv.is_array else sv.col
-        )
-    fdf = fdf.where(subj_val.isNotNull())
-    fctx.backlinks[rs.name] = Backlink(
-        kind_col=F.lit(subj_kind), value_col=subj_val
-    )
-    subj_ctx_cols = dict(fctx.columns)
-    subj_ctx_cols["$parentID"] = (subj_val, "string")
-    pctx = fctx.child(fdf, subj_ctx_cols, dict(fctx.constants))
-    pctx.constants["__vocab__"] = fctx.constants["__vocab__"]
-    pctx.constants["__vocab_seen__"] = fctx.constants["__vocab_seen__"]
-    # this body applies pending_joins to its emission frame below, so
-    # same-frame children may register huge-dictionary lookups as joins
-    pctx.pending_joins = []
-    pctx.joinable = True
-
-    emissions: list[tuple[Column, ValueExpr, bool]] = []  # (pred, term, inverse)
-
-    # ---- @type (explicit or auto-declared default) -------------------------
-    type_template = rs.prop_template("@type")
-    if not type_template and spec.auto_declare:
-        cls_id = (
-            f"{pctx.constants.get('$datasetBase')}/def/"
-            f"{py_normalize(rs.name)}"
-        )
-        _register_vocab(pctx, "class", rs.name, cls_id, rs.comment, OWL_CLASS)
-        emissions.append(
-            (F.lit(RDF_TYPE), ValueExpr(iri_term(cls_id), form="term"),
-             False)
-        )
-    elif type_template:
-        tv = compile_uri(type_template, pctx, declare=False)
-        tcol = F.element_at(tv.col, 1) if tv.is_array else tv.col
-        emissions.append(
-            (F.lit(RDF_TYPE),
-             ValueExpr(F.when(tcol.isNotNull(), iri_term(tcol)), form="term"),
-             False)
-        )
-
-    # ---- properties ---------------------------------------------------------
-    fanouts: list[DataFrame] = []
-    for prop, template in rs.properties:
-        if prop in ("@id", "@type", "@graph"):
-            continue
-        templates = template if isinstance(template, list) else [template]
-        for tpl in templates:
-            try:
-                _compile_property(
-                    rs, prop, tpl, pctx, fdf, graph, subj_kind, subj_val,
-                    emissions, fanouts,
-                )
-            except MissingVar as mv:
-                pctx.warnings.append(
-                    f"{rs.name}.{prop}: variable {mv} not in schema — skipped"
-                )
-            except ValueError as err:
-                pctx.warnings.append(f"{rs.name}.{prop}: {err} — skipped")
-
-    # ---- assemble ------------------------------------------------------
-    # Two-step emission keeps everything inside whole-stage codegen:
-    #   1. ONE projection materializes subject/predicate/term columns (the
-    #      heavy expressions evaluate once per row, CSE-friendly);
-    #   2. scalar terms explode via a plain CreateArray + post-filter
-    #      (higher-order filter/transform would force interpreted eval —
-    #      measured ~50x slower on the quad hot path);
-    #   3. each array-valued term gets its own explode-then-wrap select.
-    # huge-dictionary reconcile lookups: re-base the emission frame with a
-    # left broadcast join per registered lookup (the resolved side is
-    # dictionary-shaped — unique keys — so row multiplicity is preserved)
-    for key_col, res_df, alias in pctx.pending_joins:
-        fdf = fdf.join(
-            F.broadcast(res_df), key_col == F.col(f"__k_{alias}"), "left"
-        ).drop(f"__k_{alias}")
-
-    if emissions:
-        out.extend(
-            _emit_quads(fdf, graph, subj_kind, subj_val, emissions)
-        )
-
-    out.extend(fanouts)
-
-    # ---- auto-declared vocabulary, gated on the resource firing -------------
-    vocab_rows = _drain_vocab(pctx)
-    if vocab_rows:
-        out.append(_const_quads_gated(fdf, vocab_rows))
-    return out
+    def build(self) -> Optional[DataFrame]:
+        """The quad DataFrame (not deduplicated); None when nothing emits."""
+        pieces = []
+        if self.quads:
+            pieces.append("array({})".format(", ".join(
+                render(self._gate(sc)) for sc, render in self.quads)))
+        pieces += [render(self._gate(sc)) for sc, render in self.arrays]
+        by_gates: dict[tuple, list[tuple]] = {}
+        for rows, scopes in self.vocab.values():
+            gates = tuple(dict.fromkeys(self._gate(sc) for sc in scopes))
+            by_gates.setdefault(gates, []).extend(rows)
+        for gates, rows in by_gates.items():
+            arr = "array({})".format(", ".join(
+                _quad_fields_sql(*("NULL" if x is None else sql_string(x)
+                                   for x in row)) for row in rows))
+            pieces.append(arr if "" in gates else "if({}, {}, array())".format(
+                " OR ".join(f"({x})" for x in gates), arr))
+        if not pieces:
+            return None
+        frame = self.base
+        if self.filters and all(c is not None for c in self.filters):
+            frame = frame.where(reduce(lambda a, b: a | b, self.filters))
+        depth = len(self.cols)
+        for level in range(depth):
+            for key_col, res_df, alias in self.joins[level]:
+                frame = frame.join(
+                    F.broadcast(res_df), key_col == F.col(f"__k_{alias}"),
+                    "left").drop(f"__k_{alias}")
+            last = level + 1 == depth
+            frame = self.level_frame(
+                frame, level, self.cols[level],
+                () if last else self.sources[level],
+                keep=depth > 1 or bool(self.heads[0]))
+        quads = pieces[0] if len(pieces) == 1 else f"concat({', '.join(pieces)})"
+        return (frame.selectExpr(f"explode({quads}) AS q")
+                .where("q IS NOT NULL").selectExpr("q.*"))
 
 
-def _emit_quads(frame: DataFrame, graph: str | Column | None,
-                subj_kind: str | Column, subj_val: Column,
-                emissions: list[tuple[Column, ValueExpr, bool]]
-                ) -> list[DataFrame]:
-    """Quad plans for one subject's (predicate, term, inverse) emissions.
-
-    ONE projection names every input: ``__subj``, ``__sk`` (a carried
-    subject kind), ``__g`` (a row-templated graph) and ``__p{i}`` /
-    ``__t{i}``, so each quad after it is one SQL expression over those
-    names.  The scalar terms' quads explode from one plain CreateArray
-    and NULLs are filtered after (higher-order filter/transform would
-    force interpreted eval — measured ~50x slower on the quad hot path);
-    each array-valued term explodes first and then wraps."""
-    proj: list[Column] = [subj_val.alias("__subj")]
-    carry = [sql_ident("__subj")]
-    if isinstance(subj_kind, Column):
-        proj.append(subj_kind.alias("__sk"))
-        sk = sql_ident("__sk")
-        carry.append(sk)
-    else:
-        sk = sql_string(subj_kind)
-    if isinstance(graph, Column):
-        proj.append(graph.alias("__g"))
-        g = sql_ident("__g")
-        carry.append(g)
-    else:
-        g = "NULL" if graph is None else sql_string(graph)
-    for i, (pred, term_ve, _) in enumerate(emissions):
-        proj.append(term_ve.col.alias(f"__t{i}"))
-        proj.append(pred.alias(f"__p{i}"))
-    flat = frame.select(*proj)
-
-    out: list[DataFrame] = []
-    scalar_quads = [
-        _quad_sql(g, sk, f"__p{i}", f"__t{i}", inverse)
-        for i, (_, term_ve, inverse) in enumerate(emissions)
-        if not term_ve.is_array
-    ]
-    if scalar_quads:
-        out.append(_non_null_quads(flat.selectExpr(
-            f"explode(array({', '.join(scalar_quads)})) AS q")))
-    for i, (_, term_ve, inverse) in enumerate(emissions):
-        if not term_ve.is_array:
-            continue
-        t = sql_ident("__t")
-        exploded = flat.selectExpr(
-            *carry, sql_ident(f"__p{i}"),
-            f"explode({sql_ident(f'__t{i}')}) AS {t}",
-        ).where(f"{t} IS NOT NULL AND {t}.v IS NOT NULL")
-        out.append(_non_null_quads(exploded.selectExpr(
-            _quad_sql(g, sk, f"__p{i}", "__t", inverse) + " AS q")))
-    return out
+def _and_sql(*conds: str) -> str:
+    return " AND ".join(c for c in conds if c)
 
 
-def _non_null_quads(q_frame: DataFrame) -> DataFrame:
-    return q_frame.where("q IS NOT NULL").selectExpr("q.*")
+def _all(*conds: Optional[Column]) -> Optional[Column]:
+    """The given conditions in turn (None: no condition): each one is
+    evaluated only where the ones before it hold, so a parent's filter
+    guards its child's."""
+    conds = [c for c in conds if c is not None]
+    return reduce(F.when, conds) if conds else None
 
 
 def _quad_fields_sql(*fields: str) -> str:
@@ -1071,19 +1004,136 @@ def _quad_fields_sql(*fields: str) -> str:
         for name, e in zip(QUAD_FIELDS, fields)))
 
 
-def _quad_sql(g: str, sk: str, p: str, t: str, inverse: bool) -> str:
-    """SQL text of one quad over named columns: subject ``__subj`` of
-    kind ``sk``, predicate column ``p``, term struct column ``t``, graph
-    ``g``; NULL when the term, its value or the subject is missing."""
-    s, p, t = sql_ident("__subj"), sql_ident(p), sql_ident(t)
+def _quad_sql(gate: str, g: str, sk: str, s: str, p: str, t: str,
+              inverse: bool) -> str:
+    """SQL text of one quad: subject ``s`` of kind ``sk``, predicate
+    ``p``, term struct ``t``, graph ``g`` (all SQL); NULL unless ``gate``
+    holds and the term, its value and the subject are present."""
     if inverse:
         quad = _quad_fields_sql(g, f"{t}.k", f"{t}.v", p, sk, s,
                                 "NULL", "NULL")
     else:
         quad = _quad_fields_sql(g, sk, s, p, f"{t}.k", f"{t}.v",
                                 f"{t}.dt", f"{t}.lg")
-    return (f"CASE WHEN {t} IS NOT NULL AND {t}.v IS NOT NULL "
-            f"AND {s} IS NOT NULL THEN {quad} END")
+    return "CASE WHEN {} THEN {} END".format(_and_sql(
+        gate, f"{t} IS NOT NULL AND {t}.v IS NOT NULL AND {s} IS NOT NULL"),
+        quad)
+
+
+# ---------------------------------------------------------------------------
+# Resource compilation
+# ---------------------------------------------------------------------------
+def compile_resource(rs: ResourceSpec, cctx: CompileCtx, alone: bool
+                     ) -> Optional[tuple[CompileCtx, str | Column | None]]:
+    """Register one top-level resource in the spec lineage.
+
+    ``alone``: the spec's only resource with quads of its own, so its
+    filter and non-NULL subject filter the lineage itself (and push into
+    the scan) instead of flagging its rows.  Returns the resource's
+    context and graph (a constant IRI, a row column or None); None for a
+    literal resource."""
+    if rs.pattern is not None:
+        # literal-resource templates only make sense embedded; top-level
+        # pattern resources produce no quads of their own
+        return None
+    consts = dict(cctx.constants)
+    consts["$resourceID"] = rs.name
+    fctx = cctx.child(cctx.df, dict(cctx.columns), consts)
+    cond = filters_condition(rs, fctx)
+
+    # graph routing (R12): constant graph IRIs fold on the driver; a graph
+    # template referencing row variables (reference expands per row,
+    # template_support.py:284-287) compiles to a real graph column
+    graph: str | Column | None = None
+    g = "NULL"
+    if rs.graph:
+        gvars = parse_template(rs.graph).referenced_vars()
+        if any(v in fctx.columns for v in gvars):
+            gv = compile_uri(rs.graph, fctx, declare=False)
+            graph = (F.element_at(F.array_compact(gv.col), 1)
+                     if gv.is_array else gv.col).cast("string")
+        else:
+            state = pyeval.EvalState(fctx.spec)
+            graph = pyeval.uri_expand(rs.graph, dict(fctx.constants), state)[0]
+            fctx.constants["$graph_const"] = graph
+            g = sql_string(graph)
+
+    kind, subj = _subject(rs, fctx)
+    lineage = cctx.lineage
+    if alone:
+        frame = fctx.df.filter(cond) if cond is not None else fctx.df
+        fctx.df = lineage.base = frame.where(subj.isNotNull())
+        pctx = _open_scope(rs, fctx, 0, None, kind, subj, checked=True)
+    else:
+        lineage.filters.append(cond)
+        pctx = _open_scope(rs, fctx, 0, cond, kind, subj)
+    if isinstance(graph, Column):
+        g = lineage.column(pctx.scope, graph, lineage.name("__g"))
+    _compile_resource_body(rs, pctx, g)
+    return pctx, graph
+
+
+def _subject(rs: ResourceSpec, cctx: CompileCtx) -> tuple[str, Column]:
+    """(term kind, subject Column) of one instantiation of ``rs``."""
+    id_template = rs.prop_template("@id") or "<row>"
+    if id_template == "<_>":
+        return "bnode", _skolem_bnode(rs.name, cctx)
+    sv = compile_uri(id_template, cctx, declare=False)
+    return "iri", (F.element_at(F.array_compact(sv.col), 1)
+                   if sv.is_array else sv.col)
+
+
+def _open_scope(rs: ResourceSpec, cctx: CompileCtx, level: int,
+                rows: Optional[Column], kind: str, subj: Column,
+                checked: bool = False) -> CompileCtx:
+    """The context of one resource instantiation: its scope in the
+    lineage (``Lineage.scope``), its subject as ``$parentID`` and as the
+    ``<::name>`` backlink, and its level's broadcast joins."""
+    lineage = cctx.lineage
+    scope = lineage.scope(level, rows, kind, subj, checked)
+    subj = scope.subject_col
+    cctx.backlinks[rs.name] = Backlink(kind_col=F.lit(kind), value_col=subj)
+    cols = dict(cctx.columns)
+    cols["$parentID"] = (subj, "string")
+    pctx = cctx.child(cctx.df, cols, dict(cctx.constants), scope=scope)
+    # huge-dictionary reconcile lookups join onto this level's frame
+    pctx.pending_joins = lineage.joins[level]
+    pctx.joinable = True
+    return pctx
+
+
+def _compile_resource_body(rs: ResourceSpec, pctx: CompileCtx, g: str) -> None:
+    """Type and property quads of one resource instantiation."""
+    spec, lineage, scope = pctx.spec, pctx.lineage, pctx.scope
+    type_template = rs.prop_template("@type")
+    if not type_template and spec.auto_declare:
+        cls_id = (
+            f"{pctx.constants.get('$datasetBase')}/def/"
+            f"{py_normalize(rs.name)}"
+        )
+        _register_vocab(pctx, "class", rs.name, cls_id, rs.comment, OWL_CLASS)
+        lineage.emit(scope, g, F.lit(RDF_TYPE),
+                     ValueExpr(iri_term(cls_id), form="term"), False)
+    elif type_template:
+        tv = compile_uri(type_template, pctx, declare=False)
+        tcol = F.element_at(tv.col, 1) if tv.is_array else tv.col
+        lineage.emit(scope, g, F.lit(RDF_TYPE),
+                     ValueExpr(F.when(tcol.isNotNull(), iri_term(tcol)),
+                               form="term"), False)
+
+    for prop, template in rs.properties:
+        if prop in ("@id", "@type", "@graph"):
+            continue
+        templates = template if isinstance(template, list) else [template]
+        for tpl in templates:
+            try:
+                _compile_property(rs, prop, tpl, pctx, g)
+            except MissingVar as mv:
+                pctx.warnings.append(
+                    f"{rs.name}.{prop}: variable {mv} not in schema — skipped"
+                )
+            except ValueError as err:
+                pctx.warnings.append(f"{rs.name}.{prop}: {err} — skipped")
 
 
 def _skolem_bnode(name: str, cctx: CompileCtx) -> Column:
@@ -1101,12 +1151,9 @@ def _skolem_bnode(name: str, cctx: CompileCtx) -> Column:
     return F.md5(F.concat(*parts))
 
 
-def _compile_property(
-    rs: ResourceSpec, prop: str, template: Any, pctx: CompileCtx,
-    fdf: DataFrame, graph: str | None, subj_kind: str, subj_val: Column,
-    emissions: list, fanouts: list[DataFrame],
-) -> None:
-    spec = pctx.spec
+def _compile_property(rs: ResourceSpec, prop: str, template: Any,
+                      pctx: CompileCtx, g: str) -> None:
+    spec, lineage, scope = pctx.spec, pctx.lineage, pctx.scope
     inverse = prop.startswith("^")
     if inverse:
         prop = prop[1:]
@@ -1120,12 +1167,9 @@ def _compile_property(
         if prop_def.cls:
             cls = compile_uri(prop_def.cls, pctx, declare=False)
             ccol = F.element_at(cls.col, 1) if cls.is_array else cls.col
-            emissions.append(
-                (F.lit(RDF_TYPE),
-                 ValueExpr(F.when(ccol.isNotNull(), iri_term(ccol)),
-                           form="term"),
-                 False)
-            )
+            lineage.emit(scope, g, F.lit(RDF_TYPE),
+                         ValueExpr(F.when(ccol.isNotNull(), iri_term(ccol)),
+                                   form="term"), False)
 
     pv = compile_uri(prop, pctx)
     pred = F.element_at(pv.col, 1) if pv.is_array else pv.col
@@ -1141,25 +1185,19 @@ def _compile_property(
 
     if isinstance(template, dict):
         # nested inline resource spec (R5)
-        child = ResourceSpec(ResourceDef(**template))
-        _compile_nested_resource(child, pctx, fdf, graph, subj_kind, subj_val,
-                                 pred, inverse, emissions, fanouts)
+        _compile_nested_resource(ResourceSpec(ResourceDef(**template)),
+                                 pctx, g, pred, inverse)
         return
     if not isinstance(template, str):
         raise ValueError(f"unsupported property template {template!r}")
     if template == "":
         template = "{" + prop + "}"  # P4 transposition (doc.md:188)
 
-    vctx = pctx.child(fdf, dict(pctx.columns), dict(pctx.constants))
+    vctx = pctx.child(pctx.df, dict(pctx.columns), dict(pctx.constants))
     vctx.constants["$prop"] = propname
-    vctx.constants["__vocab__"] = pctx.constants["__vocab__"]
-    vctx.constants["__vocab_seen__"] = pctx.constants["__vocab_seen__"]
     value = compile_value(template, vctx)
     if isinstance(value, EmbeddedFanout):
-        fanouts.extend(
-            _compile_fanout(value, vctx, fdf, graph, subj_kind, subj_val,
-                            pred, inverse)
-        )
+        _compile_fanout(value, vctx, g, pred, inverse)
         return
     if prop_def and prop_def.required:
         # F4/K6: a missing value for a required prop counts as a row error
@@ -1171,148 +1209,106 @@ def _compile_property(
             missing = value.col.isNull() | value.col["v"].isNull()
         pctx.error_plans.append(
             (f"{rs.name}.{prop_def.name}:required-missing",
-             fdf.where(missing))
+             pctx.rows_df().where(missing))
         )
-    emissions.append((pred, value, inverse))
+    lineage.emit(scope, g, pred, value, inverse)
 
 
-def _compile_nested_resource(
-    child: ResourceSpec, pctx: CompileCtx, fdf: DataFrame, graph: str | None,
-    subj_kind: str, subj_val: Column, pred: Column, inverse: bool,
-    emissions: list, fanouts: list[DataFrame],
-) -> None:
+def _compile_nested_resource(child: ResourceSpec, pctx: CompileCtx, g: str,
+                             pred: Column, inverse: bool) -> None:
     """Inline dict property value -> child resource on the same rows."""
     consts = dict(pctx.constants)
     consts["$resourceID"] = child.name
-    cctx2 = pctx.child(fdf, dict(pctx.columns), consts)
-    cctx2.constants["__vocab__"] = pctx.constants["__vocab__"]
-    cctx2.constants["__vocab_seen__"] = pctx.constants["__vocab_seen__"]
-    cond = filters_condition(child, cctx2)
-    cdf = fdf.filter(cond) if cond is not None else fdf
-
-    if child.pattern is not None:
-        ctx3 = cctx2.child(cdf, dict(cctx2.columns), dict(cctx2.constants))
-        value = compile_pattern(child.pattern, ctx3)
-        if isinstance(value, EmbeddedFanout):
-            raise ValueError("map_to inside literal resource pattern")
-        # literal-resource expansion uses only the FIRST value
-        # (template_support.py:277-282); emit from the child-filtered frame
-        vcol = (F.element_at(F.array_compact(value.col), 1)
-                if value.is_array else value.col)
-        fanouts.extend(_emit_quads(
-            cdf, graph, subj_kind, subj_val,
-            [(pred, ValueExpr(vcol, form="term"), inverse)]))
-        return
-
-    cctx3 = cctx2.child(cdf, dict(cctx2.columns), dict(cctx2.constants))
-    cctx3.constants["__vocab__"] = cctx2.constants["__vocab__"]
-    cctx3.constants["__vocab_seen__"] = cctx2.constants["__vocab_seen__"]
-    child_dfs = _compile_resource_body(child, cctx3, cdf, graph)
-    fanouts.extend(child_dfs)
-    child_bl = cctx3.backlinks.get(child.name)
-    if child_bl is not None and child_bl.value_col is not None:
-        term = term_struct(child_bl.kind_col, child_bl.value_col)
-        fanouts.extend(_emit_quads(
-            cdf, graph, subj_kind, subj_val,
-            [(pred, ValueExpr(term, form="term"), inverse)]))
+    cctx = pctx.child(pctx.df, dict(pctx.columns), consts)
+    scope = pctx.scope
+    _compile_child(child, cctx, scope.level,
+                   _all(scope.rows, filters_condition(child, cctx)),
+                   g, pred, inverse, scope)
 
 
-def _compile_fanout(
-    fo: EmbeddedFanout, pctx: CompileCtx, fdf: DataFrame, graph: str | None,
-    subj_kind: str, subj_val: Column, pred: Column, inverse: bool,
-) -> list[DataFrame]:
-    """map_to / smap_to: posexplode nested data into an embedded template.
+def _compile_fanout(fo: EmbeddedFanout, pctx: CompileCtx, g: str,
+                    pred: Column, inverse: bool) -> None:
+    """map_to / smap_to: the nested elements become the next lineage level.
 
-    The parent link triple and all child triples are emitted from the
-    exploded DataFrame; $listIndex / $parentID become carried columns
-    (SURVEY.md T17/T18, template_support.py:431-458).
-    """
+    The source array is projected at the parent's level and exploded with
+    the level's other sources; $listIndex / $parentID become the carried
+    position and parent-subject columns (SURVEY.md T17/T18,
+    template_support.py:431-458).  The child is typed on its own frame,
+    the parent's level frame (``Lineage.level_frame``) exploded over only
+    this source, which also feeds its error counts."""
     spec = pctx.spec
     child_rs = spec.embedded.get(fo.rsname)
     if not child_rs:
         raise ValueError(f"unknown embedded template {fo.rsname}")
 
     src = fo.source
-    src_col = src.col
     is_list = src.is_array or (src.dtype or "").startswith("array")
-    if not is_list:
-        src_col = F.array(src_col)
+    # a NULL source maps nothing, like an empty list (template_support.py
+    # map_to skips a falsy value)
+    src_col = src.col if is_list else F.when(src.col.isNotNull(),
+                                             F.array(src.col))
 
-    base = fdf.select(
-        "*",
-        F.lit(subj_kind).alias("__psk"),
-        subj_val.alias("__ps"),
-        pred.alias("__pp"),
-    )
-    exploded = base.select(
-        "*", F.posexplode(src_col).alias("__li", "__el")
-    )
+    lineage, scope = pctx.lineage, pctx.scope
+    level = scope.level + 1
+    src_name = lineage.source(scope, src_col)
+    li, z = f"__li{level}", f"__z{level}"
+    frame = lineage.level_frame(pctx.df, scope.level, sources=[src_name])
 
-    elem_type = exploded.schema["__el"].dataType
+    elem = F.col(z)[src_name]
+    elem_type = frame.schema[z].dataType[src_name].dataType
     from pyspark.sql.types import StructType as _ST
 
     elem_cols: dict[str, tuple[Column, str]] = {}
     if isinstance(elem_type, _ST):
         for f_ in elem_type.fields:
-            elem_cols[f_.name] = (
-                exploded["__el"][f_.name], f_.dataType.simpleString()
-            )
+            elem_cols[f_.name] = (elem[f_.name], f_.dataType.simpleString())
 
     if fo.shielded:
         # smap_to: ONLY the element fields + $this; no inherited context, no
         # $listIndex (template_support.py:445-458)
         child_cols = dict(elem_cols)
-        child_cols["$this"] = (exploded["__el"], elem_type.simpleString())
-        child_consts: dict[str, Any] = {"$resourceID": child_rs.name}
-        cctx2 = pctx.child(exploded, child_cols, child_consts, shielded=True)
+        child_cols["$this"] = (elem, elem_type.simpleString())
+        cctx = pctx.child(frame, child_cols, {"$resourceID": child_rs.name},
+                          shielded=True)
     else:
-        from rdf_mapper_spark.compiler.context import quoted_col
-
-        child_cols = {
-            k: (quoted_col(k), v[1]) for k, v in pctx.columns.items()
-            if k in exploded.columns
-        }
+        child_cols = dict(pctx.columns)
         child_cols.update(elem_cols)
-        child_cols["$this"] = (exploded["__el"], elem_type.simpleString())
-        child_cols["$parentID"] = (exploded["__ps"], "string")
+        child_cols["$this"] = (elem, elem_type.simpleString())
+        child_cols["$parentID"] = (F.col(scope.subject), "string")
         if is_list:
-            child_cols["$listIndex"] = (exploded["__li"], "int")
+            child_cols["$listIndex"] = (F.col(li), "int")
         consts = dict(pctx.constants)
         consts["$resourceID"] = child_rs.name
-        cctx2 = pctx.child(exploded, child_cols, consts)
-        cctx2.constants["__vocab__"] = pctx.constants["__vocab__"]
-        cctx2.constants["__vocab_seen__"] = pctx.constants["__vocab_seen__"]
+        cctx = pctx.child(frame, child_cols, consts)
 
-    cond = filters_condition(child_rs, cctx2)
-    cdf = exploded.filter(cond) if cond is not None else exploded
-    cctx3 = cctx2.child(cdf, dict(cctx2.columns), dict(cctx2.constants))
-    if not fo.shielded:
-        cctx3.constants["__vocab__"] = cctx2.constants["__vocab__"]
-        cctx3.constants["__vocab_seen__"] = cctx2.constants["__vocab_seen__"]
+    exists = F.col(li) < F.size(F.col(src_name))
+    parent_fired = F.col(scope.fired) if scope.fired else None
+    _compile_child(child_rs, cctx, level,
+                   _all(parent_fired, exists, filters_condition(child_rs, cctx)),
+                   g, pred, inverse, scope)
 
-    out: list[DataFrame] = []
-    if child_rs.pattern is not None:
-        value = compile_pattern(child_rs.pattern, cctx3)
+
+def _compile_child(child: ResourceSpec, cctx: CompileCtx, level: int,
+                   rows: Optional[Column], g: str, pred: Column,
+                   inverse: bool, parent: Scope) -> None:
+    """A nested or embedded resource on the ``level`` rows where ``rows``
+    holds, linked from the ``parent`` subject by ``pred``."""
+    lineage = cctx.lineage
+    if child.pattern is not None:
+        ctx = cctx.child(cctx.df, dict(cctx.columns), dict(cctx.constants),
+                         scope=lineage.scope(level, rows))
+        value = compile_pattern(child.pattern, ctx)
         if isinstance(value, EmbeddedFanout):
-            raise ValueError("nested map_to inside literal template")
-        out.extend(_emit_links(cdf, graph, inverse, value))
-        return out
-
-    child_dfs = _compile_resource_body(child_rs, cctx3, cdf, graph)
-    out.extend(child_dfs)
-    child_bl = cctx3.backlinks.get(child_rs.name)
-    if child_bl is not None and child_bl.value_col is not None:
-        term_ve = ValueExpr(
-            term_struct(child_bl.kind_col, child_bl.value_col), form="term"
-        )
-        out.extend(_emit_links(cdf, graph, inverse, term_ve))
-    return out
-
-
-def _emit_links(cdf: DataFrame, graph: str | Column | None, inverse: bool,
-                value: ValueExpr) -> list[DataFrame]:
-    """Parent link triples from the exploded frame, whose parent subject
-    kind, subject and predicate are the carried ``__psk``/``__ps``/``__pp``
-    columns."""
-    return _emit_quads(cdf, graph, F.col("__psk"), F.col("__ps"),
-                       [(F.col("__pp"), value, inverse)])
+            raise ValueError("map_to inside literal resource pattern")
+        # a literal resource is its pattern's FIRST value
+        # (template_support.py:277-282)
+        term = ValueExpr(F.element_at(F.array_compact(value.col), 1)
+                         if value.is_array else value.col, form="term")
+    else:
+        kind, subj = _subject(child, cctx)
+        ctx = _open_scope(child, cctx, level, rows, kind, subj)
+        _compile_resource_body(child, ctx, g)
+        term = ValueExpr(term_struct(kind, F.col(ctx.scope.subject)),
+                         form="term")
+    lineage.emit(ctx.scope, g, pred, term, inverse,
+                 subject=(sql_string(parent.kind), sql_ident(parent.subject)))

@@ -2,28 +2,30 @@
 
 Lifecycle (SURVEY.md §3.4):
 
-    YAML spec --driver--> models --compile--> per-resource Column plans
-      -> scan -> filters (pushed down) -> mint IRIs/values (codegen exprs,
-      sha1 minting included; date pandas UDFs) -> explodes -> per-resource
-      quad DFs
-      -> union -> autoCV distinct-label side aggregation
+    YAML spec --driver--> models --compile--> one lineage per spec
+      -> scan -> filters (pushed down) -> projections: every resource's
+      fired flag and subject, then its terms, computed only where it fires
+      (codegen exprs, sha1 minting included; date pandas UDFs, which run
+      on every row) -> [posexplode_outer per map_to level]
+      -> one explode of a per-row quad array (vocabulary and autoCV quads
+      are per-row constants gated on the fired flags)
       -> salted dropDuplicates (RDF set semantics)
 
-One-offs and auto-declared vocabulary are constant-folded on the driver
-(pyeval) — they are row-independent by construction (reference processes
-one_offs once before any row, template_processor.py:29-33).
+One-offs are constant-folded on the driver (pyeval) and unioned on as a
+local relation — they are row-independent by construction (reference
+processes one_offs once before any row, template_processor.py:29-33).
 """
 
 from __future__ import annotations
 
-from typing import Any, Optional
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rdf_mapper_spark import pyeval
 from rdf_mapper_spark.compiler.context import Backlink, CompileCtx, df_columns
-from rdf_mapper_spark.compiler.resources import autocv_side_quads, compile_resource
+from rdf_mapper_spark.compiler.resources import Lineage, compile_resource
 from rdf_mapper_spark.quads import (
     dedup_quads,
     empty_quads,
@@ -54,8 +56,6 @@ class MapperEngine:
         # row-templated @graphAdd resources: lazy distinct-g plans folded
         # into the preserved set by resolve_preserved_graphs()
         self._preserved_graph_plans: list[DataFrame] = []
-        # inputs apply() persisted; unpersisted by release()
-        self._cached_inputs: list[DataFrame] = []
         # fold one-offs once on the driver
         self._oneoff_state = pyeval.EvalState(spec)
         base_ctx = {**spec.context, "$file": None, "$row": None,
@@ -67,67 +67,56 @@ class MapperEngine:
     # ------------------------------------------------------------------
     def apply(self, df: DataFrame, file_name: str = "file",
               row_order_col: str | None = None,
-              dedup: bool = True,
-              cache_input: bool | None = None) -> DataFrame:
+              dedup: bool = True) -> DataFrame:
         """Compile + apply the mapping; returns the quad DataFrame.
 
-        ``cache_input``: every resource template (plus autoCV side
-        aggregations and vocabulary gates) is an independent branch over the
-        input, so a multi-resource spec re-evaluates the input plan once per
-        branch. When the input is expensive (UDF extraction, joins), persist
-        it once; default: auto — cache when the spec fans out into more than
-        two branches. Pass False when the input is a plain table scan
-        (rescans are then cheaper than materialization). The cache lives
-        until ``release()``.
-        """
+        Every resource of the spec emits from one lineage over ``df``, so
+        the input is read once; only the driver-side constant quads
+        (one-offs, reconcile side quads) are unioned onto it."""
         spark = df.sparkSession
         prepared = self._prepare(df, file_name, row_order_col)
-        if cache_input is None:
-            cache_input = len(self.spec.resources) > 2
-        if cache_input:
-            prepared = prepared.persist()
-            self._cached_inputs.append(prepared)
         constants: dict[str, Any] = dict(self.spec.context)
         constants.setdefault("$graph", DEFAULT_GRAPH)
         constants["__alias_map__"] = self.alias_map
         if self.reconcile_transport is not None:
             constants["__reconcile_transport__"] = self.reconcile_transport
+        lineage = Lineage(prepared)
         cctx = CompileCtx(
             spec=self.spec,
             df=prepared,
             constants=constants,
             columns=df_columns(prepared),
             hash_digest=self.hash_digest,
+            lineage=lineage,
         )
         # one-off subjects are backref targets (<::name>)
         for name, term in self._oneoff_state.backlinks.items():
             if hasattr(term, "kind"):
                 cctx.backlinks[name] = Backlink(const=term)
 
-        plans: list[DataFrame] = []
+        # a spec's only resource filters the scan itself (pushdown);
+        # several resources flag their rows in one shared projection.
+        # perfbench's specs all have one resource: the shared path is
+        # not benchmarked
+        alone = sum(rs.pattern is None for rs in self.spec.resources) == 1
         for rs in self.spec.resources:
-            rs_plans = compile_resource(rs, cctx)
-            plans.extend(rs_plans)
-            if rs.graph and rs.preserved_graph:
-                try:
-                    state = pyeval.EvalState(self.spec)
-                    g = pyeval.uri_expand(rs.graph, dict(constants), state)[0]
-                    self.preserved_graphs.add(g)
-                except Exception:
-                    # row-templated @graphAdd: graph IRIs are per-row
-                    # columns — record the resource's own quad plans so
-                    # resolve_preserved_graphs() can fold their distinct g
-                    # lazily (reference folds per row while emitting,
-                    # template_processor.py:72-97)
-                    if rs_plans:
-                        self._preserved_graph_plans.append(
-                            union_quads(rs_plans).select("g").distinct()
-                        )
-        for use in cctx.autocv_uses:
-            plans.append(
-                autocv_side_quads(use, self.spec,
-                                  str(constants.get("$datasetBase")))
-            )
+            compiled = compile_resource(rs, cctx, alone)
+            if compiled is None or not (rs.graph and rs.preserved_graph):
+                continue
+            rctx, graph = compiled
+            if isinstance(graph, Column):
+                # row-templated @graphAdd: graph IRIs are per-row columns —
+                # resolve_preserved_graphs() folds the distinct g of the
+                # rows the resource fires on (reference folds per row while
+                # emitting, template_processor.py:72-97)
+                self._preserved_graph_plans.append(
+                    rctx.rows_df().select(graph.alias("g")).distinct())
+            else:
+                self.preserved_graphs.add(graph)
+        plans: list[DataFrame] = []
+        quads = lineage.build()
+        if quads is not None:
+            plans.append(quads)
         if cctx.side_quad_rows:
             # reconcile proxy concepts + possibleMatch annotations
             plans.append(quads_from_rows(spark, list(cctx.side_quad_rows)))
@@ -140,14 +129,6 @@ class MapperEngine:
             return empty_quads(spark)
         out = union_quads(plans)
         return dedup_quads(out, salt=self.dedup_salt) if dedup else out
-
-    def release(self) -> None:
-        """Unpersist the inputs ``apply()`` cached. Call it once the quads
-        and their error counts are written: an engine that outlives one
-        apply (one per stream) otherwise keeps every input it cached."""
-        for df in self._cached_inputs:
-            df.unpersist()
-        self._cached_inputs.clear()
 
     def resolve_preserved_graphs(self) -> set[str]:
         """The full preserved-graph set for the update/delete sinks.

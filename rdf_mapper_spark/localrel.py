@@ -19,7 +19,6 @@ host).  The helpers here keep dictionary-sized driver rows in the JVM:
   execution time.  Falls back to the classic path only if pandas is
   unavailable.
 
-`json_rows` is also how the compiler builds its constant quads.
 
 Semantics are identical to `createDataFrame(rows, schema)`: same rows,
 same schema, same null handling, and an integer out of its field's range

@@ -102,10 +102,10 @@ def build_quads_split(extracted: DataFrame,
     corpus scale that branch is the bulk of the quad volume and it becomes
     a pure map-side pipeline."""
     page_q = MapperEngine(MappingSpec(PAGE_SPEC, auto_declare=False)).apply(
-        extracted, file_name="pages", dedup=False, cache_input=False)
+        extracted, file_name="pages", dedup=False)
     link_q = MapperEngine(MappingSpec(LINK_SPEC, auto_declare=False)).apply(
         links.select("url", "entity_iri"),
-        file_name="links", dedup=False, cache_input=False)
+        file_name="links", dedup=False)
     # the repartition is a codegen boundary, not a performance knob: fused,
     # the hash-aggregate's generated code lands inside the (oversized)
     # emission consume function, Janino splits it into a nested class, and
@@ -114,7 +114,7 @@ def build_quads_split(extracted: DataFrame,
     entities = (links.select("entity_iri", "entity_type", "mention")
                 .distinct().repartition("entity_iri"))
     entity_q = MapperEngine(MappingSpec(ENTITY_SPEC, auto_declare=False)).apply(
-        entities, file_name="entities", dedup=False, cache_input=False)
+        entities, file_name="entities", dedup=False)
     from rdf_mapper_spark.quads import union_quads
 
     return page_q, union_quads([link_q, entity_q])

@@ -84,10 +84,7 @@ def stream_mapping(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         quads = engine.apply(batch_df, file_name=f"{file_name}-{batch_id}")
-        try:
-            quads.write.mode("append").parquet(out_path)
-        finally:
-            engine.release()
+        quads.write.mode("append").parquet(out_path)
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

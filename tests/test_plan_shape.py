@@ -340,3 +340,54 @@ def test_minting_only_spec_runs_no_python(spark):
     quads = MapperEngine(spec).apply(df)
     plan = quads._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan
+
+
+def _one_scan_plan_collects_with_codegen(spark, quads):
+    """One file scan, no limit(1) gate, one exchange (the set-dedup); the
+    collect runs with codegen fallback off, so a generated method over
+    the 64 KB limit fails here instead of silently running interpreted."""
+    plan = quads._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("GlobalLimit") == 0, plan
+    assert plan.count("Exchange") == 1, plan
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        return quads.collect()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+
+
+def test_products_csv_apply_is_one_scan(spark, tmp_path):
+    import csv
+
+    from rdf_mapper_spark.sources import read_csv
+    from tests.test_py4j_budget import _COLS, _ROW, CSV_SPEC
+
+    path = str(tmp_path / "p.csv")
+    with open(path, "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow([c.split()[0] for c in _COLS.split(", ")])
+        w.writerow(_ROW)
+        w.writerow(("R2", "Other", "", "", "Z", "7", "", ""))
+    quads = MapperEngine(MappingSpec(CSV_SPEC)).apply(
+        read_csv(spark, path), file_name="p")
+    assert _one_scan_plan_collects_with_codegen(spark, quads)
+
+
+def test_products_json_apply_with_map_to_is_one_scan(spark, tmp_path):
+    import json
+
+    from rdf_mapper_spark.sources import read_jsonlines
+    from tests.test_py4j_budget import _COLS, _ROW, JSON_SPEC
+
+    names = [c.split()[0] for c in _COLS.split(", ")]
+    rows = [dict(zip(names, _ROW), components=[
+                {"sku": "C1", "share": 40}, {"sku": "C2", "share": 60}]),
+            dict(zip(names, _ROW), id="R2", components=None)]
+    path = str(tmp_path / "p.jsonl")
+    with open(path, "w") as fh:
+        fh.write("".join(json.dumps(r) + "\n" for r in rows))
+    quads = MapperEngine(MappingSpec(JSON_SPEC)).apply(
+        read_jsonlines(spark, path), file_name="p")
+    out = _one_scan_plan_collects_with_codegen(spark, quads)
+    assert any(r.s == "http://data.example.org/component/C2" for r in out)
