@@ -187,16 +187,19 @@ def apply_function(name: str, raw_args: list[tuple[str, str]], ve: ValueExpr,
         return replace(out, dtype=dtype or out.dtype, datatype=datatype,
                        form="native")
 
+    # try_cast, not cast: under ANSI a malformed number ("x") fails the
+    # whole job, where the reference skips that row's property (NULL here)
     if name == "asInt":
         # int(float(s)) truncation incl. negatives (function.py:68-69);
         # '' casts to NULL which matches noneOrEmpty -> None
         return elementwise(
-            lambda c: c.cast("double").cast("bigint"),
+            lambda c: c.try_cast("double").try_cast("bigint"),
             dtype="bigint", datatype=XSD + "integer",
         )
     if name == "asDecimal":
         return elementwise(
-            lambda c: c.cast("double"), dtype="double", datatype=XSD + "decimal"
+            lambda c: c.try_cast("double"), dtype="double",
+            datatype=XSD + "decimal",
         )
     if name == "asBoolean":
         truthy = [str(a).lower() for a in args] if args else \

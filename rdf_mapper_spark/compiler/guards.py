@@ -60,10 +60,11 @@ class _GuardTranslator:
             vals = node.values
             out = self.keep(vals[-1])
             if isinstance(node.op, ast.And):
-                # a and b -> b if pytruthy(a) else a
+                # a and b -> b if pytruthy(a) else a, so keep(a) there:
+                # a falsy comparison is False (dropped), not a non-null value
                 for v in reversed(vals[:-1]):
                     out = F.when(self._pytruthy(v), out).otherwise(
-                        self._keep_value(v))
+                        self.keep(v))
             else:
                 # a or b -> a if pytruthy(a) else b; a truthy => keep
                 for v in reversed(vals[:-1]):

@@ -1,13 +1,19 @@
 """Web-scale KG-construction pipeline (BASELINE.json north rule).
 
 pages (url, warc_ts, html, text, lang)
-  -> extract   (vectorized Arrow UDF; byte-identical per url)
-  -> mentions  (n-gram candidates x broadcast alias dictionary)
-  -> link      (entity linking + deterministic proxy minting)
-  -> triples   (candidate quads via the template engine)
-  -> canonicalize (salted dedup + connected-components entity clustering)
+  -> extract   (JVM regexp chain; byte-identical per url to the Python
+                reference extractor)
+  -> prefilter (optional corpus hygiene: quality verdict + canonical-URL
+                dedup)
+  -> link      (n-gram mentions x broadcast alias dictionary)
+  -> triples   (candidate quads via the template engine, each group at
+                its natural key)
+  -> canonicalize (connected-components entity clustering, rewrite, dedup)
   -> materialize  (partitioned graph tables / N-Quads)
 
-Each stage checkpoints to a parquet "stage table" with per-partition lineage
-and triple-count metrics; re-running skips completed stages.
+`run.kg_step` is this flow, written once: the batch pipeline
+(`run.run_pipeline`) and both KG streams (`streaming.py`) call it and
+differ only in how a stage boundary is materialized.  In checkpointed
+mode each stage writes a parquet "stage table" with per-partition lineage
+and row-count metrics; re-running skips completed stages.
 """

@@ -9,51 +9,18 @@ reference's per-distinct-key reconciliation cache
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _prefix_keep_fn(first_tokens: list[str]):
-    # exactly-two-parameter lambda for the pyspark HOF bridge
-    return lambda head, gram: F.when(head.isin(first_tokens), gram)
-
-
-def _ngram_array(tokens: Column, n: int) -> Column:
-    """All n-grams of a token array — O(len) sliding zip_with."""
-    from rdf_mapper_spark.ops.text import ngrams_col
-
-    return ngrams_col(tokens, n)
+from rdf_mapper_spark.ops.text import ngrams_col
 
 
 def detect_mentions(pages: DataFrame, text_col: str = "text",
-                    max_ngram: int = 2,
-                    first_tokens: list[str] | None = None) -> DataFrame:
-    """pages -> (url, mention) candidate surface forms (lowercased n-grams).
-
-    With ``first_tokens`` (the distinct first tokens of the dictionary's
-    surface forms — dictionary-sized, not corpus-sized), n-grams are only
-    materialized at positions whose first token can start a dictionary
-    entry: prefix filtering cuts the exploded candidate volume from
-    O(tokens x max_ngram) to O(dictionary hits) per page, which is the
-    difference between shuffling the corpus and shuffling the mentions.
-    """
+                    max_ngram: int = 2) -> DataFrame:
+    """pages -> (url, mention) candidate surface forms (lowercased n-grams)."""
     tokens = F.split(F.lower(F.col(text_col)), r"[^\p{L}\p{N}]+")
-    if first_tokens is not None:
-        first_arr = list(first_tokens)
-        grams_parts = []
-        for n in range(1, max_ngram + 1):
-            grams = _ngram_array(tokens, n)
-            # head token of gram at position i is tokens[i]
-            heads = tokens if n == 1 else F.slice(
-                tokens, 1, F.greatest(F.size(tokens) - (n - 1), F.lit(0))
-            )
-            kept = F.zip_with(heads, grams, _prefix_keep_fn(first_arr))
-            grams_parts.append(F.filter(kept, lambda x: x.isNotNull()))
-        all_grams = (F.concat(*grams_parts) if len(grams_parts) > 1
-                     else grams_parts[0])
-    else:
-        grams = [_ngram_array(tokens, n) for n in range(1, max_ngram + 1)]
-        all_grams = F.concat(*grams) if len(grams) > 1 else grams[0]
+    grams = [ngrams_col(tokens, n) for n in range(1, max_ngram + 1)]
+    all_grams = F.concat(*grams) if len(grams) > 1 else grams[0]
     return pages.select(
         "url", F.explode(all_grams).alias("mention")
     ).where(F.col("mention") != "")
@@ -61,7 +28,6 @@ def detect_mentions(pages: DataFrame, text_col: str = "text",
 
 def link_entities(pages: DataFrame, aliases: DataFrame,
                   text_col: str = "text", max_ngram: int = 2,
-                  prefix_filter_limit: int = 0,
                   broadcast_dict: bool = True) -> DataFrame:
     """-> (url, mention, entity_iri, entity_type) via broadcast hash join.
 
@@ -72,35 +38,13 @@ def link_entities(pages: DataFrame, aliases: DataFrame,
     The n-gram explode feeds the broadcast-hash-join probe inside the SAME
     whole-stage-codegen stage: misses are discarded immediately and nothing
     reaches a shuffle, so candidate volume is a CPU cost only — and the
-    hash probe is the cheapest membership test available.  A head-token
-    prefix pre-filter (``prefix_filter_limit`` > 0: distinct dictionary
-    first tokens pushed into the explode as an ``isin``) cuts exploded rows
-    ~7x but was MEASURED SLOWER end-to-end (4.7-5.8s vs 1-3s on the 100k
-    synthetic corpus, identical output): inside a higher-order-function
-    lambda the In never gets the OptimizeIn InSet rewrite, so every token
-    linear-scans the literal list.  Default is therefore OFF; enable it
-    only in a non-broadcast (shuffle-join) regime where exploded rows hit
-    the wire and their volume, not CPU, is the constraint.
+    hash probe is the cheapest membership test available.
     """
-    first_tokens = None
-    if prefix_filter_limit:
-        ft = (
-            aliases.select(
-                F.element_at(F.split(F.lower(F.col("alias")), " "), 1)
-                .alias("t")
-            ).distinct().limit(prefix_filter_limit + 1).collect()
-        )
-        if len(ft) <= prefix_filter_limit:
-            # sorted -> byte-identical plans across runs (resume/caching)
-            first_tokens = sorted(r["t"] for r in ft)
-    mentions = detect_mentions(pages, text_col=text_col, max_ngram=max_ngram,
-                               first_tokens=first_tokens)
+    mentions = detect_mentions(pages, text_col=text_col, max_ngram=max_ngram)
     # broadcast_dict=False is the escape hatch for dictionaries too big for
     # executor memory (~100M+ aliases at web scale): fall back to a shuffle
     # hash join on the mention/alias key. Candidate n-grams then DO hit the
-    # wire, so pair it with prefix_filter_limit (the isin caveat in the
-    # docstring no longer dominates — in this regime volume, not CPU, is
-    # the constraint). Identical output either way (tested).
+    # wire. Identical output either way (tested).
     # the shuffle_hash hint is required, not just the absence of
     # broadcast(): under autoBroadcastJoinThreshold the optimizer would
     # silently re-broadcast a small dictionary and the test/plan contract
@@ -110,12 +54,3 @@ def link_entities(pages: DataFrame, aliases: DataFrame,
     return mentions.join(
         dict_side, mentions["mention"] == aliases["alias"], "inner"
     ).select("url", "mention", "entity_iri", "entity_type")
-
-
-def linked_pages(pages: DataFrame, aliases: DataFrame,
-                 text_col: str = "text", max_ngram: int = 2) -> DataFrame:
-    """Pages joined with their linked mentions (one row per url x mention),
-    the input table for the candidate-triple mapping spec."""
-    links = link_entities(pages, aliases, text_col=text_col,
-                          max_ngram=max_ngram)
-    return pages.join(links, "url", "inner")

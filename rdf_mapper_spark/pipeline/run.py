@@ -3,9 +3,14 @@
     pages -> extract -> link -> candidate triples (template engine)
           -> canonicalize (CC over sameAs evidence) -> dedup -> materialize
 
-The candidate-triple stage IS the template engine: the mapping below is an
-ordinary mapping spec compiled over the linked-pages DataFrame, so the
-benchmark throughput measures the engine itself at scale.
+`kg_step` is that flow, written once. `run_pipeline` (checkpointed or
+fused) and both KG streams (streaming.py) run it and differ only in how a
+stage boundary is materialized: a parquet checkpoint, a persisted frame,
+or nothing.
+
+The candidate-triple stage IS the template engine: the mappings below are
+ordinary mapping specs compiled over the extracted and linked DataFrames,
+so the benchmark throughput measures the engine itself at scale.
 """
 
 from __future__ import annotations
@@ -15,7 +20,7 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +34,8 @@ from rdf_mapper_spark.pipeline.canonicalize import (
 from rdf_mapper_spark.pipeline.checkpoint import StageRunner
 from rdf_mapper_spark.pipeline.extract import with_extracted_text
 from rdf_mapper_spark.pipeline.linking import link_entities
-from rdf_mapper_spark.quads import dedup_quads
+from rdf_mapper_spark.pipeline.prefilter import prefilter_pages
+from rdf_mapper_spark.quads import dedup_quads, union_quads
 from rdf_mapper_spark.sinks import write_graph_tables
 from rdf_mapper_spark.spec import MappingSpec
 
@@ -83,26 +89,27 @@ ENTITY_SPEC = {
 PIPELINE_SPEC = {"page": PAGE_SPEC, "link": LINK_SPEC, "entity": ENTITY_SPEC}
 
 
-def build_quads_split(extracted: DataFrame,
-                      links: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Candidate quads as (page_quads, entity_linked_quads) — no dedup.
+def page_quads(extracted: DataFrame) -> DataFrame:
+    """Page triples, one row per url of ``extracted`` (url, warc_ts, text,
+    lang) — no dedup.
 
-    ``extracted``: one row per url (url, warc_ts, text, lang);
-    ``links``: one row per url x mention (url, mention, entity_iri,
-    entity_type).  Page triples come straight from ``extracted``; entity
-    description triples from the distinct (iri, type, label) set — the
-    duplicate-per-occurrence emission never exists, so the final dedup
-    shuffles ~4x less.
-
-    The SPLIT exists because the two halves have different downstream
-    needs: page quads are duplicate-free by construction (one row per url;
-    callers must feed a url-unique pages table) and their subjects/objects
-    live in URL/literal space that canonical rewriting never touches, so
-    they can bypass the rewrite joins AND the final dedup shuffle — at
-    corpus scale that branch is the bulk of the quad volume and it becomes
-    a pure map-side pipeline."""
-    page_q = MapperEngine(MappingSpec(PAGE_SPEC, auto_declare=False)).apply(
+    They are kept apart from `linked_quads` because the two halves have
+    different downstream needs: page quads are duplicate-free by
+    construction (one row per url; callers must feed a url-unique pages
+    table) and their subjects/objects live in URL/literal space that
+    canonical rewriting never touches, so they can bypass the rewrite joins
+    AND the final dedup shuffle — at corpus scale that branch is the bulk
+    of the quad volume and it becomes a pure map-side pipeline."""
+    return MapperEngine(MappingSpec(PAGE_SPEC, auto_declare=False)).apply(
         extracted, file_name="pages", dedup=False)
+
+
+def linked_quads(links: DataFrame) -> DataFrame:
+    """Mention triples, one per url x mention row of ``links`` (url,
+    mention, entity_iri, entity_type), and entity description triples from
+    the distinct (iri, type, label) set — no dedup.  The
+    duplicate-per-occurrence emission never exists, so the final dedup
+    shuffles ~4x less."""
     link_q = MapperEngine(MappingSpec(LINK_SPEC, auto_declare=False)).apply(
         links.select("url", "entity_iri"),
         file_name="links", dedup=False)
@@ -115,17 +122,42 @@ def build_quads_split(extracted: DataFrame,
                 .distinct().repartition("entity_iri"))
     entity_q = MapperEngine(MappingSpec(ENTITY_SPEC, auto_declare=False)).apply(
         entities, file_name="entities", dedup=False)
-    from rdf_mapper_spark.quads import union_quads
-
-    return page_q, union_quads([link_q, entity_q])
+    return union_quads([link_q, entity_q])
 
 
-def build_quads(extracted: DataFrame, links: DataFrame) -> DataFrame:
-    """Full candidate quad union (see build_quads_split)."""
-    from rdf_mapper_spark.quads import union_quads
+def kg_step(
+    pages: DataFrame,
+    aliases: DataFrame,
+    mapping: Callable[[], DataFrame],
+    stage: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    prefilter: bool = False,
+    dedup_salt: int = 0,
+) -> tuple[DataFrame, Callable[[], DataFrame]]:
+    """The KG flow over one set of pages: extract -> (prefilter) -> link ->
+    natural-key emission -> canonical rewrite -> dedup.
 
-    page_q, dyn_q = build_quads_split(extracted, links)
-    return union_quads([page_q, dyn_q])
+    ``stage(name, build)`` turns each boundary — ``extract``, ``prefilter``,
+    ``link``, ``triples_pages``, ``triples_links`` — into the DataFrame the
+    next step reads: a checkpoint, a persisted frame or the plan itself.
+    Each ``build`` compiles only its own specs, so a stage restored from a
+    checkpoint compiles nothing.
+
+    Returns ``(page_q, canonical)``: the page quads, and a thunk that builds
+    the canonicalized, deduplicated entity-linked quads. ``mapping`` (a
+    thunk yielding the canonical mapping) is called only from
+    ``canonical``, so a caller whose ``canonical`` output is already
+    checkpointed builds no mapping."""
+    extracted = stage("extract", lambda: with_extracted_text(pages).select(
+        "url", "warc_ts", F.col("extracted_text").alias("text"), "lang"))
+    if prefilter:
+        # corpus hygiene (quality verdict + canonical-URL dedup) BEFORE
+        # linking/emission: everything downstream shuffles strictly less
+        extracted = stage("prefilter", lambda: prefilter_pages(extracted))
+    links = stage("link", lambda: link_entities(extracted, aliases))
+    page_q = stage("triples_pages", lambda: page_quads(extracted))
+    dyn_q = stage("triples_links", lambda: linked_quads(links))
+    return page_q, lambda: dedup_quads(rewrite_canonical(dyn_q, mapping()),
+                                       salt=dedup_salt)
 
 
 def _input_fingerprint(pages: DataFrame, aliases: DataFrame,
@@ -165,13 +197,6 @@ def _input_fingerprint(pages: DataFrame, aliases: DataFrame,
     return h.hexdigest()
 
 
-#: Fused mode: populate the extract+link caches from a driver thread
-#: while the main thread compiles the emission specs (guide §2.6).
-#: Module-level so A/B harnesses can flip it; semantics are identical
-#: either way (the block manager's per-partition locks dedup the work).
-_WARM_OVERLAP = True
-
-
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -181,7 +206,8 @@ def run_pipeline(
     materialize: bool = True,
     prefilter: bool = False,
 ) -> dict:
-    """Run all stages; returns metrics incl. emitted triple count + timings.
+    """Run `kg_step` end to end; returns metrics incl. emitted triple count
+    + timings.
 
     With ``workdir`` set, every stage checkpoints and is resumable; without,
     the plan runs fused (fastest single-pass benchmark mode).
@@ -190,132 +216,79 @@ def run_pipeline(
     trades a second shuffle for bounded task input).
     """
     t0 = time.time()
-    runner = StageRunner(spark, workdir or "", enabled=workdir is not None)
+    fused = workdir is None
+    runner = StageRunner(spark, workdir or "", enabled=not fused)
     # fingerprint the ACTUAL inputs (file identities+sizes, the alias table
     # content, the mapping spec): any change forces recompute instead of
     # silently resuming stale stage parquet. Only computed when resuming is
     # possible — the fused benchmark path pays nothing.
-    fp = (_input_fingerprint(pages, aliases, PIPELINE_SPEC)
-          if workdir is not None else "")
+    fp = "" if fused else _input_fingerprint(pages, aliases, PIPELINE_SPEC)
+
+    def mapping() -> DataFrame:
+        return canonical_mapping(sameas_edges_from_aliases(aliases))
 
     # the canonical mapping (alias sameAs edges -> connected components ->
-    # driver union-find) depends ONLY on the alias dictionary: submit it
-    # from a driver thread so its jobs back-fill the cluster while the
-    # extract+link pass runs (guide §2.6 — overlap independent jobs).
-    # Fused mode only: the checkpointed path re-reads stages from parquet
-    # and resumability bookkeeping stays strictly sequential.  The pool
-    # is shut down however the run ends, so a failing stage leaves no
-    # worker thread behind it submitting jobs.
-    mapping_fut = None
-    pool = ThreadPoolExecutor(max_workers=2) if workdir is None else None
+    # driver union-find) depends ONLY on the alias dictionary: in fused
+    # mode submit it from a driver thread so its jobs back-fill the cluster
+    # while the extract+link pass runs (guide §2.6 — overlap independent
+    # jobs).  The checkpointed path builds it inside its `canonical` stage,
+    # so a resumed run never builds it.  The pool is shut down however the
+    # run ends, so a failing stage leaves no worker thread behind it
+    # submitting jobs.
+    pool = ThreadPoolExecutor(max_workers=2) if fused else None
+
+    # fused mode: the frame linking reads feeds BOTH the page-triple branch
+    # and the linking branch, and the link table feeds the mention-triple
+    # and entity-dictionary branches — persist both (checkpointed mode
+    # reads them back from parquet, already cheap to rescan).  No
+    # materialization barrier before the final job: its concurrent union
+    # branches populate the caches through the block manager's
+    # per-partition locks (a second task needing an in-progress partition
+    # waits for it instead of recomputing), so the extract+link pass
+    # pipelines INTO the emission/dedup job — measured ~2 s faster at 100k
+    # pages than counting links first, identical output.
+    cached: dict[str, DataFrame] = {}
+    persist = ("prefilter" if prefilter else "extract", "link")
+    link_count = None
+
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        nonlocal link_count
+        df = runner.run(name, build, fingerprint=fp)
+        if fused and name in persist:
+            cached[name] = df = df.persist()
+            if name == "link":
+                # populate the extract+link caches from a driver thread
+                # while THIS thread compiles the three emission specs (~2 s
+                # of pure py4j/driver work during which the cluster would
+                # otherwise sit idle — guide §2.6); the link-count metric
+                # is this job's result instead of a separate cache scan
+                link_count = pool.submit(df.count)
+        return df
+
     try:
-        if pool is not None:
-            mapping_fut = pool.submit(
-                lambda: canonical_mapping(sameas_edges_from_aliases(aliases)))
-
-        extracted = runner.run(
-            "extract",
-            lambda: with_extracted_text(pages).select(
-                "url", "warc_ts",
-                F.col("extracted_text").alias("text"), "lang",
-            ),
-            fingerprint=fp,
-        )
-        if prefilter:
-            # corpus hygiene (quality verdict + canonical-URL dedup) BEFORE
-            # linking/emission: everything downstream shuffles strictly less;
-            # off by default so the headline bench measures the engine, not
-            # the filter policy
-            from rdf_mapper_spark.pipeline.prefilter import prefilter_pages
-
-            extracted = runner.run(
-                "prefilter", lambda: prefilter_pages(extracted),
-                fingerprint=fp,
-            )
-        # fused mode: the extraction output feeds BOTH the page-triple
-        # branch and the linking branch — persist it once (checkpointed mode
-        # reads it back from parquet, already cheap to rescan); same for the
-        # link table, consumed by the mention-triple and entity-dictionary
-        # branches.  No materialization barrier before the final job: its
-        # concurrent union branches populate the caches through the block
-        # manager's per-partition locks (a second task needing an
-        # in-progress partition waits for it instead of recomputing), so the
-        # extract+link pass pipelines INTO the emission/dedup job — measured
-        # ~2 s faster at 100k pages than counting links first, identical
-        # output.  The page/link counts afterwards are pure cache scans.
-        n_pages = n_links = None
-        if workdir is None:
-            extracted = extracted.persist()
-        links = runner.run(
-            "link", lambda: link_entities(extracted, aliases), fingerprint=fp
-        )
-        warm_fut = None
-        if workdir is None:
-            links = links.persist()
-            if _WARM_OVERLAP:
-                # populate the extract+link caches from a driver thread while
-                # THIS thread compiles the three emission specs (~2 s of pure
-                # py4j/driver work during which the cluster would otherwise
-                # sit idle — guide §2.6, overlap independent work).  The
-                # final job's branches then read (mostly) populated caches
-                # through the block manager's per-partition locks, and the
-                # link-count metric is this job's result instead of a
-                # separate cache scan.
-                warm_fut = pool.submit(links.count)
-        # ONE build_quads_split call feeds both stage lambdas: each call
-        # compiles all three mapping specs to Column plans (~0.6 s of pure
-        # driver/py4j work per engine), and the two runner stages previously
-        # re-ran it — six engine compiles per invocation, profiled as a
-        # ~3.7 s driver gap before the first emission job.  The lazy closure
-        # keeps checkpoint-resume semantics: a stage restored from parquet
-        # never triggers the compile.
-        _split: list = []
-
-        def _quads_split():
-            if not _split:
-                _split.append(build_quads_split(extracted, links))
-            return _split[0]
-
-        page_q = runner.run(
-            "triples_pages", lambda: _quads_split()[0], fingerprint=fp,
-        )
-        dyn_q = runner.run(
-            "triples_links", lambda: _quads_split()[1], fingerprint=fp,
-        )
-
-        def canonical() -> DataFrame:
-            # only the entity-linked half can contain rewritable IRIs or
-            # duplicates; the page half is distinct by construction and joins
-            # the output untouched (no rewrite joins, no dedup shuffle)
-            if mapping_fut is not None:
-                mapping = mapping_fut.result()
-            else:
-                mapping = canonical_mapping(sameas_edges_from_aliases(aliases))
-            rewritten = rewrite_canonical(dyn_q, mapping)
-            from rdf_mapper_spark.quads import union_quads
-
-            return union_quads(
-                [page_q, dedup_quads(rewritten, salt=dedup_salt)]
-            )
-
-        final = runner.run("canonical", canonical, fingerprint=fp)
+        if fused:
+            mapping = pool.submit(mapping).result
+        page_q, canonical = kg_step(pages, aliases, mapping, stage,
+                                    prefilter=prefilter,
+                                    dedup_salt=dedup_salt)
+        final = stage("canonical",
+                      lambda: union_quads([page_q, canonical()]))
 
         n_triples = final.count()
-        if workdir is None:
-            # link count from the overlapped warm job (else a cache scan);
-            # page count is a pure cache scan either way
-            n_links = warm_fut.result() if warm_fut is not None \
-                else links.count()
-            n_pages = extracted.count()
+        n_pages = n_links = None
+        if fused:
+            # link count from the overlapped warm job; page count is a pure
+            # cache scan
+            n_links = link_count.result()
+            n_pages = cached[persist[0]].count()
         if materialize and workdir:
             write_graph_tables(final, f"{workdir}/graph_tables")
         # release this run's caches: callers consume the metrics (and the
         # materialized tables), not the DataFrames — leaked cache entries
         # would also be silently reused by any later identical-plan run,
         # corrupting benchmarks
-        if workdir is None:
-            extracted.unpersist()
-            links.unpersist()
+        for df in cached.values():
+            df.unpersist()
     finally:
         if pool is not None:
             pool.shutdown(cancel_futures=True)

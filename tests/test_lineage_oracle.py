@@ -234,3 +234,35 @@ def test_plugin_udf_sees_no_row_its_resource_rejects(spark):
     assert {(q.s.value, q.p, q.o.value) for q in quads} == {
         ("http://x/a/1", f"{BASE}/def/v", "1"),
         ("http://x/b/2", f"{BASE}/def/u", "X")}
+
+
+def test_malformed_numbers_skip_the_property(spark):
+    """asInt / asDecimal over a malformed number skip that row's property,
+    as pyeval does; an ANSI cast would fail the whole job instead."""
+    spec = {"globals": {"$datasetBase": BASE},
+            "resources": [{"name": "r", "properties": {
+                "@id": "<http://x/r/{id}>", "label": "{id}",
+                "i": "{qty | asInt}", "d": "{qty | asDecimal}"}}]}
+    values = ["x", "1.5", "-2.7", "1e3", "", None]
+    rows = [{"id": str(i), "qty": v} for i, v in enumerate(values)]
+    quads = _same_as_oracle(spark, spec, rows, auto_declare=False)
+    ints = {(s, o) for _, s, p, o in quads if p == f"{BASE}/def/i"}
+    assert ints == {("http://x/r/1", "1"), ("http://x/r/2", "-2"),
+                    ("http://x/r/3", "1000")}
+    labels = {s for _, s, p, _ in quads if p == f"{BASE}/def/label"}
+    assert len(labels) == len(values)
+
+
+def test_locals_guard_over_null_skips_the_row(spark):
+    """`'x' in locals() and <comparison>`: a FALSE comparison must not
+    count as a kept non-null value."""
+    spec = {"globals": {"$datasetBase": BASE},
+            "resources": [{"name": "s",
+                           "guard": "'num' in locals() and num > 10",
+                           "properties": {"@id": "<http://x/s/{id}>",
+                                          "v": "{id}"}}]}
+    rows = [{"id": "1", "num": 20}, {"id": "2", "num": None},
+            {"id": "3", "num": 5}]
+    quads = _same_as_oracle(spark, spec, rows)
+    assert {s for _, s, _, _ in quads
+            if s.startswith("http://x/s/")} == {"http://x/s/1"}

@@ -88,7 +88,10 @@ def test_canonical_mapping_merges_legacy(spark):
     assert all("/legacy/" in k for k in rows), rows
 
 
-def test_pipeline_end_to_end_and_resume(spark, tmp_path):
+def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
+    import rdf_mapper_spark.pipeline.run as run_mod
+    from rdf_mapper_spark.engine import MapperEngine
+
     pages = make_pages(spark, 400, n_entities=50)
     aliases = make_alias_dict(spark, 50)
     workdir = str(tmp_path / "ckpt")
@@ -100,9 +103,20 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert final.where(F.col("s").contains("/legacy/")).count() == 0
     assert final.where((F.col("ok") == "iri")
                        & F.col("o").contains("/legacy/")).count() == 0
-    # second run resumes every stage from checkpoint
+    # second run resumes every stage from checkpoint, and a resumed stage
+    # compiles no spec and builds no canonical mapping
+    calls = []
+
+    def counted(fn):
+        return lambda *a, **k: calls.append(fn.__name__) or fn(*a, **k)
+
+    monkeypatch.setattr(MapperEngine, "__init__",
+                        counted(MapperEngine.__init__))
+    monkeypatch.setattr(run_mod, "canonical_mapping",
+                        counted(run_mod.canonical_mapping))
     m2 = run_pipeline(spark, pages, aliases, workdir=workdir,
                       materialize=False)
+    assert calls == []
     assert m2["triples"] == m1["triples"]
     assert all(v.get("resumed") for v in m2["stages"].values()), m2["stages"]
     # lineage metrics recorded per partition

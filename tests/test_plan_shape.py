@@ -143,27 +143,20 @@ def test_kg_pipeline_plan_is_pure_jvm(spark):
     """With the JVM extractor, the ENTIRE fused KG pipeline plan (extract
     -> link -> triples -> canonicalize -> dedup) contains zero *EvalPython
     nodes — no Python workers anywhere on the 100-TB path."""
-    from pyspark.sql import functions as F
-
     from rdf_mapper_spark.pipeline.canonicalize import (
         canonical_mapping,
-        rewrite_canonical,
         sameas_edges_from_aliases,
     )
     from rdf_mapper_spark.pipeline.datagen import make_alias_dict, make_pages
-    from rdf_mapper_spark.pipeline.extract import with_extracted_text
-    from rdf_mapper_spark.pipeline.linking import link_entities
-    from rdf_mapper_spark.pipeline.run import build_quads_split
-    from rdf_mapper_spark.quads import dedup_quads, union_quads
+    from rdf_mapper_spark.pipeline.run import kg_step
+    from rdf_mapper_spark.quads import union_quads
 
     pages = make_pages(spark, 500, n_entities=50)
     aliases = make_alias_dict(spark, 50)
-    ex = with_extracted_text(pages).select(
-        "url", "warc_ts", F.col("extracted_text").alias("text"), "lang")
-    links = link_entities(ex, aliases)
-    pq, dq = build_quads_split(ex, links)
     mapping = canonical_mapping(sameas_edges_from_aliases(aliases))
-    final = union_quads([pq, dedup_quads(rewrite_canonical(dq, mapping))])
+    page_q, canonical = kg_step(pages, aliases, lambda: mapping,
+                                lambda name, build: build())
+    final = union_quads([page_q, canonical()])
     plan = final._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
 

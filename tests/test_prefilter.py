@@ -69,13 +69,11 @@ def test_run_pipeline_with_prefilter(spark):
     assert run["triples"] > 0
     # page subjects: only the two surviving urls
     from rdf_mapper_spark.engine import MapperEngine  # noqa: F401 (import parity)
-    from rdf_mapper_spark.pipeline.run import build_quads_split
+    from rdf_mapper_spark.pipeline.run import page_quads
     from rdf_mapper_spark.pipeline.prefilter import prefilter_pages as pf
-    from rdf_mapper_spark.pipeline.linking import link_entities
 
     kept = pf(pages.select("url", "warc_ts", "text", "lang"))
-    page_q, _ = build_quads_split(
-        kept, link_entities(kept, make_alias_dict(spark, 5)))
+    page_q = page_quads(kept)
     subjects = {r.s for r in page_q.select("s").distinct().collect()}
     assert subjects == {"http://X.com:80/p?utm_source=a", "http://y.com/q"}
 

@@ -97,7 +97,7 @@ def test_json_products_apply_send_budget(spark):
 
 
 def test_kg_build_quads_split_send_budget(spark):
-    from rdf_mapper_spark.pipeline.run import build_quads_split
+    from rdf_mapper_spark.pipeline.run import linked_quads, page_quads
 
     extracted = spark.createDataFrame(
         [("http://a.org/p1", "2020-01-01", "text", "en")],
@@ -105,5 +105,6 @@ def test_kg_build_quads_split_send_budget(spark):
     links = spark.createDataFrame(
         [("http://a.org/p1", "Berlin", "http://e.org/B", "http://e.org/C")],
         "url string, mention string, entity_iri string, entity_type string")
-    n = _warm_sends(spark, lambda: build_quads_split(extracted, links))
+    n = _warm_sends(spark, lambda: (page_quads(extracted),
+                                     linked_quads(links)))
     assert n <= KG_BUDGET, n

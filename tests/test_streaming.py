@@ -74,43 +74,57 @@ def test_stateful_quad_dedup_across_restarts(spark, tmp_path):
 
 
 def test_stream_kg_pipeline_matches_batch(spark, tmp_path):
-    """Streaming ingest of the full KG flow: two micro-batches of pages must
-    produce (after compaction-dedup) the same quad set as one batch run."""
-    from pyspark.sql import functions as F
-
+    """Streaming ingest of the full KG flow: two micro-batches of pages
+    (after compaction-dedup) and the `stream_incremental_kg` state after
+    one batch hold the same quad set as the checkpointed run's `canonical`
+    table; the fused run counts the same triples."""
     from rdf_mapper_spark.pipeline.datagen import make_alias_dict, make_pages
     from rdf_mapper_spark.pipeline.run import run_pipeline
-    from rdf_mapper_spark.quads import dedup_quads
-    from rdf_mapper_spark.streaming import stream_kg_pipeline
+    from rdf_mapper_spark.quads import QUAD_FIELDS, dedup_quads
+    from rdf_mapper_spark.streaming import (stream_incremental_kg,
+                                            stream_kg_pipeline)
 
     pages_dir = str(tmp_path / "pages")
     make_pages(spark, 200, n_entities=30).repartition(2).write.parquet(
         pages_dir
     )
+    pages = spark.read.parquet(pages_dir)
     aliases = make_alias_dict(spark, 30)
+
+    def quadset(df):
+        return {tuple(r) for r in df.select(*QUAD_FIELDS).collect()}
+
+    work = str(tmp_path / "work")
+    run_pipeline(spark, pages, aliases, workdir=work, materialize=False)
+    batch = quadset(spark.read.parquet(f"{work}/canonical"))
+    fused = run_pipeline(spark, pages, aliases, workdir=None,
+                         materialize=False)
+    assert fused["triples"] == len(batch) > 200
 
     out = str(tmp_path / "quads")
     ck = str(tmp_path / "ck")
     stream = (
-        spark.readStream.schema(spark.read.parquet(pages_dir).schema)
+        spark.readStream.schema(pages.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(pages_dir)
     )
     q = stream_kg_pipeline(stream, aliases, out, ck)
     q.awaitTermination(300)
-
-    streamed = dedup_quads(spark.read.parquet(out))
-    batch = run_pipeline(spark, spark.read.parquet(pages_dir), aliases,
-                         workdir=None, materialize=False)
-    assert streamed.count() == batch["triples"]
+    assert quadset(dedup_quads(spark.read.parquet(out))) == batch
     # replay the whole stream into the same sink: dedup absorbs everything
     q2 = stream_kg_pipeline(
-        spark.readStream.schema(spark.read.parquet(pages_dir).schema)
-        .parquet(pages_dir),
+        spark.readStream.schema(pages.schema).parquet(pages_dir),
         aliases, out, str(tmp_path / "ck2"),
     )
     q2.awaitTermination(300)
-    assert dedup_quads(spark.read.parquet(out)).count() == batch["triples"]
+    assert dedup_quads(spark.read.parquet(out)).count() == len(batch)
+
+    state = str(tmp_path / "state")
+    stream_incremental_kg(
+        spark.readStream.schema(pages.schema).parquet(pages_dir),
+        aliases, state, str(tmp_path / "ck3"),
+    ).awaitTermination(300)
+    assert quadset(spark.read.parquet(state)) == batch
 
 
 def test_stream_incremental_kg_recrawl(spark, tmp_path):
