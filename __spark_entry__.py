@@ -32,19 +32,18 @@ KGB = "http://example.org/kg"
 QUAD_COLS_SQL = "g, sk, s, p, ok, o, odt, olg"
 
 
-#: (applicationId, sf_dir, name) -> spread DataFrame.  `spark.read
-#: .parquet` costs ~80 ms of driver-side source resolution per call and
-#: every query invocation re-reads the same immutable fixture; caching
-#: the PLAN (not any result — DataFrames are immutable lazy plans) is
-#: the same per-session amortization the stored-ANN reader uses
-#: (ops/ann_index._READ_CACHE) and that Spark itself applies to file
-#: listings (spark.sql.hive.filesourcePartitionFileCacheSize).
-_T_CACHE: dict = {}
-
-
+#: ("table", sf_dir, name) in the plan cache -> spread DataFrame.
+#: `spark.read.parquet` costs ~80 ms of driver-side source resolution
+#: per call and every query invocation re-reads the same immutable
+#: fixture; caching the PLAN (not any result — DataFrames are immutable
+#: lazy plans) is the same per-session amortization the stored-ANN
+#: reader uses and that Spark itself applies to file listings
+#: (spark.sql.hive.filesourcePartitionFileCacheSize).
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _T_CACHE.get(key)
+    from rdf_mapper_spark import plan_cache
+
+    key = ("table", sf_dir, name)
+    hit = plan_cache.lookup(spark, key)
     if hit is not None:
         return hit
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -64,8 +63,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.coalesce(max(1, min(dp, rgs)))
         width = max(4, min(dp, -(-rows // 50_000)))
         df = df.repartition(width)
-    _T_CACHE[key] = df
-    return df
+    return plan_cache.store(spark, key, df)
 
 
 def _parquet_footer(uri: str) -> tuple[int, int]:
@@ -111,16 +109,11 @@ def q_kg_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _flagship_quads(spark, sf_dir, dedup=True)
 
 
-#: (applicationId, sf_dir, dedup) -> compiled flagship emission plan.
-#: Compiling the mapping spec to a Column plan costs ~0.75 s of pure
-#: driver work per call (profiled: ~3,800 py4j round-trips building the
-#: term expressions), and NINE query functions rebuild the identical
-#: plan from the same module-constant spec every invocation.  This
-#: memoizes the lazy PLAN only (no rows, no results — every count still
-#: executes from parquet); it is the prepared-statement cache any
-#: long-lived query service keeps, same pattern as `_T_CACHE` and the
-#: stored-ANN `_READ_CACHE`.
-_FLAGSHIP_CACHE: dict = {}
+#: ("flagship", sf_dir, dedup) in the plan cache -> the bound flagship
+#: emission plan.  The compiled spec is itself cached by the engine, but
+#: NINE query functions read this same plan over the same input, and a
+#: bound plan is cheaper than a bind.  Only the lazy PLAN is kept (no
+#: rows, no results — every count still executes from parquet).
 
 
 def _flagship_quads(spark: SparkSession, sf_dir: str,
@@ -135,15 +128,12 @@ def _flagship_quads(spark: SparkSession, sf_dir: str,
     from rdf_mapper_spark.engine import MapperEngine
     from rdf_mapper_spark.spec import MappingSpec
 
-    key = (spark.sparkContext.applicationId, sf_dir, dedup)
-    hit = _FLAGSHIP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = _t(spark, sf_dir, "documents")
-    engine = MapperEngine(MappingSpec(FLAGSHIP_SPEC, auto_declare=False))
-    out = engine.apply(docs, file_name="documents", dedup=dedup)
-    _FLAGSHIP_CACHE[key] = out
-    return out
+    from rdf_mapper_spark import plan_cache
+
+    return plan_cache.cached(spark, ("flagship", sf_dir, dedup), lambda: (
+        MapperEngine(MappingSpec(FLAGSHIP_SPEC, auto_declare=False)).apply(
+            _t(spark, sf_dir, "documents"), file_name="documents",
+            dedup=dedup)))
 
 
 def _oracle_kg_flagship() -> str:
@@ -352,16 +342,15 @@ def _cites_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_mapper_spark.engine import MapperEngine
     from rdf_mapper_spark.spec import MappingSpec
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cites")
-    hit = _FLAGSHIP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "parent", (F.col("doc_id") / 2).cast("long"))
-    engine = MapperEngine(MappingSpec(CITES_SPEC, auto_declare=False))
-    out = engine.apply(docs, file_name="documents", dedup=False)
-    _FLAGSHIP_CACHE[key] = out
-    return out
+    from rdf_mapper_spark import plan_cache
+
+    def build() -> DataFrame:
+        docs = _t(spark, sf_dir, "documents").withColumn(
+            "parent", (F.col("doc_id") / 2).cast("long"))
+        return MapperEngine(MappingSpec(CITES_SPEC, auto_declare=False)
+                            ).apply(docs, file_name="documents", dedup=False)
+
+    return plan_cache.cached(spark, ("flagship", sf_dir, "cites"), build)
 
 
 def q_kg_path_cites(spark: SparkSession, sf_dir: str) -> DataFrame:

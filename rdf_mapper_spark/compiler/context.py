@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +42,42 @@ class Backlink:
     const: Optional[Term] = None
 
 
+class Frame:
+    """A frame of the spec lineage as a recipe: the steps that derive it
+    from the input rows it is bound to.  A compiled mapping keeps recipes,
+    never DataFrames, so it pins no plan and serves every input of its
+    schema."""
+
+    __slots__ = ("parent", "step")
+
+    def __init__(self, parent: Optional["Frame"] = None,
+                 step: Optional[Callable[[DataFrame], DataFrame]] = None
+                 ) -> None:
+        self.parent = parent
+        self.step = step
+
+    def then(self, step: Callable[[DataFrame], DataFrame]) -> "Frame":
+        return Frame(self, step)
+
+    def where(self, cond: Optional[Column]) -> "Frame":
+        """The rows of this frame where ``cond`` holds (None: all)."""
+        if cond is None:
+            return self
+        return self.then(lambda df: df.where(cond))
+
+    def bind(self, df: DataFrame, memo: Optional[dict] = None) -> DataFrame:
+        """This frame over the input ``df``; ``memo`` holds the frames
+        already bound over the same input, so shared steps run once."""
+        if self.parent is None:
+            return df
+        if memo is not None and self in memo:
+            return memo[self]
+        out = self.step(self.parent.bind(df, memo))
+        if memo is not None:
+            memo[self] = out
+        return out
+
+
 @dataclass
 class Scope:
     """The rows one resource instantiation fires on, in the spec's single
@@ -65,7 +101,12 @@ class Scope:
 @dataclass
 class CompileCtx:
     spec: MappingSpec
-    df: DataFrame
+    # the rows this context compiles over, as a recipe over the input
+    frame: Frame
+    # the input the compile is prepared over: its schema types the
+    # frames, and only a compile that reads data (reconcile lookups)
+    # reads its rows
+    data: DataFrame
     constants: dict[str, Any]
     # name -> (col, simple dtype); col None: the input column of that name
     columns: dict[str, tuple[Optional[Column], str]]
@@ -75,8 +116,8 @@ class CompileCtx:
     lineage: Any = None
     scope: Scope = field(default_factory=Scope)
     warnings: list[str] = field(default_factory=list)
-    # (label, DataFrame of offending rows) for required-property violations
-    # (F4/K6): counted lazily by MapperEngine.count_errors()
+    # (label, Frame of offending rows) for required-property violations
+    # and map_by misses (F4/K6): counted by MapperEngine.count_errors()
     error_plans: list = field(default_factory=list)
     # driver-side constant quads produced during compilation (reconcile
     # proxy concepts + rec:possibleMatch annotations); dictionary-sized by
@@ -97,7 +138,7 @@ class CompileCtx:
     reconcile_cache: dict = field(default_factory=dict)
     # huge-dictionary reconcile lookups register (key_col, resolved_df,
     # alias) here; the lineage left-broadcast-joins them onto the frame of
-    # their level.  Shared only with children over the SAME DataFrame
+    # their level.  Shared only with children over the SAME frame
     # (column-name resolution must target the frame the lineage will
     # join); `joinable` marks contexts where that application is
     # guaranteed to happen.
@@ -106,6 +147,10 @@ class CompileCtx:
     # JVM constants built once per compile (the namespace map); shared
     # through child(), so they live exactly as long as this compile
     jvm_consts: dict = field(default_factory=dict)
+    # why this compile holds only for its own input or its own moment
+    # (it read data or the clock); a non-empty list keeps the compiled
+    # mapping out of the plan cache.  Shared through child()
+    volatile: list[str] = field(default_factory=list)
 
     @property
     def namespaces(self) -> dict[str, str]:
@@ -118,10 +163,9 @@ class CompileCtx:
             self.jvm_consts["ns_map"] = namespace_map(self.namespaces)
         return self.jvm_consts["ns_map"]
 
-    def rows_df(self) -> DataFrame:
+    def rows(self) -> Frame:
         """The frame's rows this context's resource fires on."""
-        rows = self.scope.rows
-        return self.df if rows is None else self.df.where(rows)
+        return self.frame.where(self.scope.rows)
 
     def has_var(self, name: str) -> bool:
         if name in self.columns:
@@ -165,7 +209,7 @@ class CompileCtx:
             self.jvm_consts[key] = quoted_col(name)
         return self.jvm_consts[key]
 
-    def child(self, df: DataFrame,
+    def child(self, frame: Frame,
               columns: dict[str, tuple[Optional[Column], str]],
               extra_constants: dict[str, Any] | None = None,
               shielded: bool = False,
@@ -173,9 +217,10 @@ class CompileCtx:
         consts = {} if shielded else dict(self.constants)
         if extra_constants:
             consts.update(extra_constants)
-        same_df = df is self.df
+        same_frame = frame is self.frame
         out = CompileCtx(
-            spec=self.spec, df=df, constants=consts, columns=columns,
+            spec=self.spec, frame=frame, data=self.data, constants=consts,
+            columns=columns,
             backlinks=self.backlinks, lineage=self.lineage,
             scope=self.scope if scope is None else scope,
             warnings=self.warnings, error_plans=self.error_plans,
@@ -183,9 +228,9 @@ class CompileCtx:
             run_timestamp=self.run_timestamp, shielded=shielded,
             hash_digest=self.hash_digest,
             reconcile_cache=self.reconcile_cache,
-            pending_joins=self.pending_joins if same_df else [],
-            joinable=self.joinable and same_df,
-            jvm_consts=self.jvm_consts,
+            pending_joins=self.pending_joins if same_frame else [],
+            joinable=self.joinable and same_frame,
+            jvm_consts=self.jvm_consts, volatile=self.volatile,
         )
         return out
 

@@ -143,6 +143,12 @@ def register(name: str, compile_fn: Callable) -> None:
     _REGISTRY[name] = compile_fn
 
 
+def registered_transformers() -> tuple:
+    """The registered transformers, as part of a compiled mapping's plan
+    cache key: registering one (again) misses every earlier compile."""
+    return tuple(sorted(_REGISTRY.items(), key=lambda kv: kv[0]))
+
+
 def register_udf(name: str, pyfn: Callable, return_type) -> None:
     """Register a scalar Python transformer as a vectorized pandas UDF.
 
@@ -268,7 +274,9 @@ def apply_function(name: str, raw_args: list[tuple[str, str]], ve: ValueExpr,
         return ValueExpr(sha1_b32hex_col(F.concat(*parts)), form="native",
                          dtype="string")
     if name == "now":
-        # pinned per-run timestamp: deterministic re-execution / resume
+        # pinned per-run timestamp: deterministic re-execution / resume;
+        # the compile holds for this run only, so it is never cached
+        cctx.volatile.append("now")
         return ValueExpr(F.lit(cctx.run_timestamp), form="native",
                          dtype="string", datatype=XSD + "dateTime")
     if name == "to_entries":
@@ -393,8 +401,7 @@ def _map_by(ve: ValueExpr, mapping_name: str, cctx) -> ValueExpr:
         )
     rid = cctx.constants.get("$resourceID", "?")
     cctx.error_plans.append(
-        (f"{rid}.map_by({mapping_name}):no-mapping",
-         cctx.rows_df().where(miss))
+        (f"{rid}.map_by({mapping_name}):no-mapping", cctx.rows().where(miss))
     )
 
     out = ve.map_elements(casefn)

@@ -175,10 +175,12 @@ class _GuardTranslator:
         if len(node.args) != 1:
             raise _Untranslatable(ast.dump(node))
         arg = self._expr(node.args[0])
+        # try_cast matches Python: int(" 3 ") is 3, int("1.5") and
+        # int("x") raise (NULL: the guard is false), int(2.7) truncates
         if fname == "int":
-            return arg.cast("double").cast("bigint")
+            return arg.try_cast("bigint")
         if fname == "float":
-            return arg.cast("double")
+            return arg.try_cast("double")
         if fname == "str":
             return arg.cast("string")
         if fname == "len":

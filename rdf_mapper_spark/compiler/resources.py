@@ -34,6 +34,7 @@ from rdf_mapper_spark.compiler import guards
 from rdf_mapper_spark.compiler.context import (
     Backlink,
     CompileCtx,
+    Frame,
     MissingVar,
     Scope,
 )
@@ -634,6 +635,9 @@ def compile_reconcile(ve: ValueExpr, args: list[Any], cctx: CompileCtx) -> Value
     below a threshold and as an Arrow-batched pandas lookup above it; the
     web-scale row-volume path stays pipeline.linking's broadcast join.
     """
+    # the lookups read this input's keys (API) and pick their plan by the
+    # size of the resolved dictionary: the compile is prepared per apply
+    cctx.volatile.append("reconcile")
     name = (str(args[0]) if args and args[0] not in (None, "None", "")
             else str(cctx.constants.get("$resourceID")))
     keytype = None
@@ -674,7 +678,7 @@ def compile_reconcile(ve: ValueExpr, args: list[Any], cctx: CompileCtx) -> Value
         key_el = (F.explode(ve.col).cast("string") if ve.is_array
                   else ve.col.cast("string"))
         keys_df = (
-            cctx.rows_df().select(key_el.alias("key"))
+            cctx.rows().bind(cctx.data).select(key_el.alias("key"))
             .where(F.col("key").isNotNull() & (F.col("key") != ""))
             .distinct()
         )
@@ -760,7 +764,7 @@ def compile_reconcile(ve: ValueExpr, args: list[Any], cctx: CompileCtx) -> Value
             from rdf_mapper_spark.localrel import local_df
 
             res_df = local_df(
-                cctx.df.sparkSession, list(live.items()),
+                cctx.data.sparkSession, list(live.items()),
                 f"__k_{alias} string, {alias} string",
             )
             cctx.pending_joins.append((c.cast("string"), res_df, alias))
@@ -829,14 +833,18 @@ class Lineage:
     CASE, on every row of the level; a plugin UDF gets NULL on the rows
     its scope does not fire on.)  Resources register quads as SQL text over
     those names: scalar terms in ``quads``, arrays of quads in ``arrays``,
-    constant vocabulary in ``vocab``.  ``build`` projects each level,
-    explodes one per-row quad array and drops NULL quads.  Each quad is
-    gated on its scope's fired flag and, above the last level, on the
-    first position of every explode below it, so it is emitted once per
-    row of its own level."""
+    constant vocabulary in ``vocab``.  Each quad is gated on its scope's
+    fired flag and, above the last level, on the first position of every
+    explode below it, so it is emitted once per row of its own level.
 
-    def __init__(self, base: DataFrame) -> None:
-        self.base = base
+    ``finish`` renders all of that once into Columns and one SQL generate;
+    ``bind`` replays it over an input frame (the lineage keeps its frames
+    as recipes, so one finished lineage serves every input of its
+    schema)."""
+
+    def __init__(self) -> None:
+        # the rows the lineage reads, as a recipe over the input
+        self.base = Frame()
         # conditions of the top-level resources; the lineage keeps the
         # rows that pass at least one when every resource has one
         self.filters: list[Optional[Column]] = []
@@ -902,21 +910,14 @@ class Lineage:
                 lists.append([])
         return name
 
-    def level_frame(self, frame: DataFrame, level: int,
-                    cols: list[Column] = (), sources: list[str] = (),
-                    keep: bool = True) -> DataFrame:
-        """``frame``, the rows of ``level``, with the level's heads and
-        ``cols`` projected (``keep``: next to its columns), exploded over
-        ``sources`` into the rows of ``level + 1``."""
-        if self.heads[level]:
-            frame = frame.select("*", *self.heads[level])
-        if cols:
-            frame = frame.select("*", *cols) if keep else frame.select(*cols)
-        if sources:
-            frame = frame.select("*", F.posexplode_outer(
-                F.arrays_zip(*sources)).alias(f"__li{level + 1}",
-                                              f"__z{level + 1}"))
-        return frame
+    def level_frame(self, frame: Frame, level: int,
+                    sources: list[str]) -> Frame:
+        """``frame``, the rows of ``level``, with the level's heads so far
+        projected, exploded over ``sources`` into the rows of
+        ``level + 1``."""
+        heads = list(self.heads[level])
+        explode = _explode(level, sources)
+        return frame.then(lambda df: _level_frame(df, heads, (), explode))
 
     def emit(self, scope: Scope, g: str, pred: Column, term: ValueExpr,
              inverse: bool, subject: Optional[tuple[str, str]] = None
@@ -946,8 +947,9 @@ class Lineage:
                   for m in range(scope.level + 1, len(self.cols))]
         return " AND ".join(conds)
 
-    def build(self) -> Optional[DataFrame]:
-        """The quad DataFrame (not deduplicated); None when nothing emits."""
+    def finish(self) -> Optional["Lineage"]:
+        """Render the quad generate and each level's explode once; None
+        when nothing emits."""
         pieces = []
         if self.quads:
             pieces.append("array({})".format(", ".join(
@@ -965,23 +967,59 @@ class Lineage:
                 " OR ".join(f"({x})" for x in gates), arr))
         if not pieces:
             return None
-        frame = self.base
-        if self.filters and all(c is not None for c in self.filters):
-            frame = frame.where(reduce(lambda a, b: a | b, self.filters))
+        # the rows some top-level resource's filter passes
+        self.passes = (reduce(lambda a, b: a | b, self.filters)
+                       if self.filters and all(c is not None
+                                               for c in self.filters)
+                       else None)
+        depth = len(self.cols)
+        self.explodes = [None if level + 1 == depth
+                         else _explode(level, self.sources[level])
+                         for level in range(depth)]
+        quads = pieces[0] if len(pieces) == 1 else f"concat({', '.join(pieces)})"
+        self.generate = F.expr(f"explode({quads}) AS q")
+        self.emitted = F.col("q").isNotNull()
+        self.fields = F.col("q.*")
+        return self
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        """The quad DataFrame (not deduplicated) over the input ``df``."""
+        frame = self.base.bind(df)
+        if self.passes is not None:
+            frame = frame.where(self.passes)
         depth = len(self.cols)
         for level in range(depth):
             for key_col, res_df, alias in self.joins[level]:
                 frame = frame.join(
                     F.broadcast(res_df), key_col == F.col(f"__k_{alias}"),
                     "left").drop(f"__k_{alias}")
-            last = level + 1 == depth
-            frame = self.level_frame(
-                frame, level, self.cols[level],
-                () if last else self.sources[level],
-                keep=depth > 1 or bool(self.heads[0]))
-        quads = pieces[0] if len(pieces) == 1 else f"concat({', '.join(pieces)})"
-        return (frame.selectExpr(f"explode({quads}) AS q")
-                .where("q IS NOT NULL").selectExpr("q.*"))
+            frame = _level_frame(frame, self.heads[level], self.cols[level],
+                                 self.explodes[level],
+                                 keep=depth > 1 or bool(self.heads[0]))
+        return (frame.select(self.generate).where(self.emitted)
+                .select(self.fields))
+
+
+def _explode(level: int, sources: list[str]) -> Optional[Column]:
+    """The explode of ``sources`` from the rows of ``level`` into those of
+    ``level + 1``: their position and their zipped elements."""
+    if not sources:
+        return None
+    return F.posexplode_outer(F.arrays_zip(*sources)).alias(
+        f"__li{level + 1}", f"__z{level + 1}")
+
+
+def _level_frame(frame: DataFrame, heads: list[Column], cols: list[Column],
+                 explode: Optional[Column], keep: bool = True) -> DataFrame:
+    """``frame`` with a level's ``heads`` and ``cols`` projected (``keep``:
+    next to its columns), then ``explode``d into the next level."""
+    if heads:
+        frame = frame.select("*", *heads)
+    if cols:
+        frame = frame.select("*", *cols) if keep else frame.select(*cols)
+    if explode is not None:
+        frame = frame.select("*", explode)
+    return frame
 
 
 def _and_sql(*conds: str) -> str:
@@ -1038,7 +1076,7 @@ def compile_resource(rs: ResourceSpec, cctx: CompileCtx, alone: bool
         return None
     consts = dict(cctx.constants)
     consts["$resourceID"] = rs.name
-    fctx = cctx.child(cctx.df, dict(cctx.columns), consts)
+    fctx = cctx.child(cctx.frame, dict(cctx.columns), consts)
     cond = filters_condition(rs, fctx)
 
     # graph routing (R12): constant graph IRIs fold on the driver; a graph
@@ -1061,8 +1099,8 @@ def compile_resource(rs: ResourceSpec, cctx: CompileCtx, alone: bool
     kind, subj = _subject(rs, fctx)
     lineage = cctx.lineage
     if alone:
-        frame = fctx.df.filter(cond) if cond is not None else fctx.df
-        fctx.df = lineage.base = frame.where(subj.isNotNull())
+        frame = fctx.frame.where(cond)
+        fctx.frame = lineage.base = frame.where(subj.isNotNull())
         pctx = _open_scope(rs, fctx, 0, None, kind, subj, checked=True)
     else:
         lineage.filters.append(cond)
@@ -1095,7 +1133,7 @@ def _open_scope(rs: ResourceSpec, cctx: CompileCtx, level: int,
     cctx.backlinks[rs.name] = Backlink(kind_col=F.lit(kind), value_col=subj)
     cols = dict(cctx.columns)
     cols["$parentID"] = (subj, "string")
-    pctx = cctx.child(cctx.df, cols, dict(cctx.constants), scope=scope)
+    pctx = cctx.child(cctx.frame, cols, dict(cctx.constants), scope=scope)
     # huge-dictionary reconcile lookups join onto this level's frame
     pctx.pending_joins = lineage.joins[level]
     pctx.joinable = True
@@ -1193,7 +1231,7 @@ def _compile_property(rs: ResourceSpec, prop: str, template: Any,
     if template == "":
         template = "{" + prop + "}"  # P4 transposition (doc.md:188)
 
-    vctx = pctx.child(pctx.df, dict(pctx.columns), dict(pctx.constants))
+    vctx = pctx.child(pctx.frame, dict(pctx.columns), dict(pctx.constants))
     vctx.constants["$prop"] = propname
     value = compile_value(template, vctx)
     if isinstance(value, EmbeddedFanout):
@@ -1209,7 +1247,7 @@ def _compile_property(rs: ResourceSpec, prop: str, template: Any,
             missing = value.col.isNull() | value.col["v"].isNull()
         pctx.error_plans.append(
             (f"{rs.name}.{prop_def.name}:required-missing",
-             pctx.rows_df().where(missing))
+             pctx.rows().where(missing))
         )
     lineage.emit(scope, g, pred, value, inverse)
 
@@ -1219,7 +1257,7 @@ def _compile_nested_resource(child: ResourceSpec, pctx: CompileCtx, g: str,
     """Inline dict property value -> child resource on the same rows."""
     consts = dict(pctx.constants)
     consts["$resourceID"] = child.name
-    cctx = pctx.child(pctx.df, dict(pctx.columns), consts)
+    cctx = pctx.child(pctx.frame, dict(pctx.columns), consts)
     scope = pctx.scope
     _compile_child(child, cctx, scope.level,
                    _all(scope.rows, filters_condition(child, cctx)),
@@ -1252,10 +1290,10 @@ def _compile_fanout(fo: EmbeddedFanout, pctx: CompileCtx, g: str,
     level = scope.level + 1
     src_name = lineage.source(scope, src_col)
     li, z = f"__li{level}", f"__z{level}"
-    frame = lineage.level_frame(pctx.df, scope.level, sources=[src_name])
+    frame = lineage.level_frame(pctx.frame, scope.level, [src_name])
 
     elem = F.col(z)[src_name]
-    elem_type = frame.schema[z].dataType[src_name].dataType
+    elem_type = frame.bind(pctx.data).schema[z].dataType[src_name].dataType
     from pyspark.sql.types import StructType as _ST
 
     elem_cols: dict[str, tuple[Column, str]] = {}
@@ -1295,7 +1333,7 @@ def _compile_child(child: ResourceSpec, cctx: CompileCtx, level: int,
     holds, linked from the ``parent`` subject by ``pred``."""
     lineage = cctx.lineage
     if child.pattern is not None:
-        ctx = cctx.child(cctx.df, dict(cctx.columns), dict(cctx.constants),
+        ctx = cctx.child(cctx.frame, dict(cctx.columns), dict(cctx.constants),
                          scope=lineage.scope(level, rows))
         value = compile_pattern(child.pattern, ctx)
         if isinstance(value, EmbeddedFanout):

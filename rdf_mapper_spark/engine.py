@@ -1,15 +1,23 @@
 """MapperEngine: mapping spec + input DataFrame -> deduplicated quad DataFrame.
 
-Lifecycle (SURVEY.md §3.4):
+Lifecycle (SURVEY.md §3.4): prepare once per (spec, input schema), bind
+per frame.
 
-    YAML spec --driver--> models --compile--> one lineage per spec
-      -> scan -> filters (pushed down) -> projections: every resource's
-      fired flag and subject, then its terms, computed only where it fires
-      (codegen exprs, sha1 minting included; date pandas UDFs, which run
-      on every row) -> [posexplode_outer per map_to level]
-      -> one explode of a per-row quad array (vocabulary and autoCV quads
-      are per-row constants gated on the fired flags)
+    YAML spec --driver--> models
+      --prepare (once per spec + schema, kept in plan_cache)-->
+      PreparedMapping: one lineage per spec as Columns and SQL text —
+      filters, every resource's fired flag and subject, then its terms,
+      computed only where it fires (codegen exprs, sha1 minting included;
+      date pandas UDFs, which run on every row), one posexplode_outer per
+      map_to level and one explode of a per-row quad array (vocabulary and
+      autoCV quads are per-row constants gated on the fired flags); error
+      and @graphAdd frames as recipes; the driver-side constant quads
+      --bind (every apply: every file, micro-batch and KG step)-->
+      scan -> filters (pushed down) -> projections -> generate
       -> salted dropDuplicates (RDF set semantics)
+
+A compile that reads data (reconcile lookups) or the clock (``now``)
+holds for one call only: it is prepared on every apply and never kept.
 
 One-offs are constant-folded on the driver (pyeval) and unioned on as a
 local relation — they are row-independent by construction (reference
@@ -18,13 +26,22 @@ processes one_offs once before any row, template_processor.py:29-33).
 
 from __future__ import annotations
 
-from typing import Any
+import hashlib
+import json
+from dataclasses import dataclass
+from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rdf_mapper_spark import pyeval
-from rdf_mapper_spark.compiler.context import Backlink, CompileCtx, df_columns
+from rdf_mapper_spark import plan_cache, pyeval
+from rdf_mapper_spark.compiler.context import (
+    Backlink,
+    CompileCtx,
+    Frame,
+    df_columns,
+)
+from rdf_mapper_spark.compiler.functions import registered_transformers
 from rdf_mapper_spark.compiler.resources import Lineage, compile_resource
 from rdf_mapper_spark.quads import (
     dedup_quads,
@@ -34,6 +51,66 @@ from rdf_mapper_spark.quads import (
 )
 from rdf_mapper_spark.sources import with_row_ordinal
 from rdf_mapper_spark.spec import DEFAULT_GRAPH, MappingSpec
+
+
+@dataclass
+class PreparedMapping:
+    """A spec compiled for one input schema: every part of the result that
+    does not depend on the rows.  It holds Columns, SQL text and frame
+    recipes, never a DataFrame.
+
+    ``lineage``: the quad plan (None: no resource emits from rows);
+    ``errors``: (label, offending rows) per error condition; ``graphs``:
+    the rows of each row-templated @graphAdd resource, as the distinct
+    ``g``; ``preserved``: the constant @graphAdd graphs; ``rows``: the
+    driver-side constant quads; ``volatile``: why the compile holds for
+    one call only (it read data or the clock), empty when it may be
+    kept."""
+
+    lineage: Optional[Lineage]
+    errors: list[tuple[str, Frame]]
+    graphs: list[Frame]
+    preserved: frozenset[str]
+    warnings: list[str]
+    rows: list[tuple]
+    volatile: list[str]
+
+    def bind(self, df: DataFrame) -> Optional[DataFrame]:
+        """The quads (not deduplicated) over ``df``, an input with its
+        ``$file`` / ``$row`` columns; None when nothing emits."""
+        plans = [] if self.lineage is None else [self.lineage.bind(df)]
+        if self.rows:
+            plans.append(quads_from_rows(df.sparkSession, self.rows))
+        return union_quads(plans) if plans else None
+
+    @staticmethod
+    def bind_frames(frames: list[Frame], df: DataFrame) -> list[DataFrame]:
+        """``frames`` over ``df``, each shared step bound once."""
+        memo: dict = {}
+        return [frame.bind(df, memo) for frame in frames]
+
+
+def _digest(value: Any) -> str:
+    return hashlib.sha1(json.dumps(value, sort_keys=True, default=repr)
+                        .encode()).hexdigest()
+
+
+def spec_digest(spec: MappingSpec) -> str:
+    """Everything of ``spec`` the compiler reads (imports resolved), as
+    one digest."""
+    def dump(models) -> list:
+        return [m.model.model_dump(by_alias=True) for m in models]
+
+    return _digest({
+        "auto_declare": spec.auto_declare,
+        "context": spec.context,
+        "namespaces": spec.namespaces,
+        "mappings": spec.mappings,
+        "resources": dump(spec.resources),
+        "one_offs": dump(spec.one_offs),
+        "embedded": dump(spec.embedded.values()),
+        "properties": dump(spec.prop_defs.values()),
+    })
 
 
 class MapperEngine:
@@ -53,9 +130,13 @@ class MapperEngine:
         self.reconcile_transport = reconcile_transport
         self.warnings: list[str] = []
         self.preserved_graphs: set[str] = set()
-        # row-templated @graphAdd resources: lazy distinct-g plans folded
-        # into the preserved set by resolve_preserved_graphs()
-        self._preserved_graph_plans: list[DataFrame] = []
+        # (compiled mapping, prepared input) of the latest apply(), whose
+        # errors count_errors() counts
+        self._bound: Optional[tuple[PreparedMapping, DataFrame]] = None
+        # the same for every apply() with row-templated @graphAdd
+        # resources, folded into the preserved set by
+        # resolve_preserved_graphs()
+        self._graph_inputs: list[tuple[PreparedMapping, DataFrame]] = []
         # fold one-offs once on the driver
         self._oneoff_state = pyeval.EvalState(spec)
         base_ctx = {**spec.context, "$file": None, "$row": None,
@@ -68,22 +149,46 @@ class MapperEngine:
     def apply(self, df: DataFrame, file_name: str = "file",
               row_order_col: str | None = None,
               dedup: bool = True) -> DataFrame:
-        """Compile + apply the mapping; returns the quad DataFrame.
+        """Apply the mapping; returns the quad DataFrame.
 
-        Every resource of the spec emits from one lineage over ``df``, so
-        the input is read once; only the driver-side constant quads
-        (one-offs, reconcile side quads) are unioned onto it."""
-        spark = df.sparkSession
+        The spec is compiled once per input schema (`prepare`) and kept in
+        the plan cache; every call binds that compile to its own frame.
+        Every resource emits from one lineage over ``df``, so the input is
+        read once; only the driver-side constant quads (one-offs,
+        reconcile side quads) are unioned onto it."""
         prepared = self._prepare(df, file_name, row_order_col)
+        spark = prepared.sparkSession
+        key = self._key(prepared)
+        mapping = plan_cache.lookup(spark, key)
+        if mapping is None:
+            mapping = self.prepare(prepared)
+            if not mapping.volatile:
+                plan_cache.store(spark, key, mapping)
+        self.warnings.extend(mapping.warnings)
+        self.preserved_graphs |= mapping.preserved
+        self._bound = (mapping, prepared)
+        if mapping.graphs:
+            self._graph_inputs.append(self._bound)
+        out = mapping.bind(prepared)
+        if out is None:
+            return empty_quads(spark)
+        return dedup_quads(out, salt=self.dedup_salt) if dedup else out
+
+    def prepare(self, prepared: DataFrame) -> "PreparedMapping":
+        """Compile the spec for the schema of ``prepared`` (the input with
+        its ``$file`` / ``$row`` columns).  Only a compile that reads data
+        (reconcile lookups) reads its rows; it and a compile that reads the
+        clock (``now``) come back marked ``volatile``."""
         constants: dict[str, Any] = dict(self.spec.context)
         constants.setdefault("$graph", DEFAULT_GRAPH)
         constants["__alias_map__"] = self.alias_map
         if self.reconcile_transport is not None:
             constants["__reconcile_transport__"] = self.reconcile_transport
-        lineage = Lineage(prepared)
+        lineage = Lineage()
         cctx = CompileCtx(
             spec=self.spec,
-            df=prepared,
+            frame=Frame(),
+            data=prepared,
             constants=constants,
             columns=df_columns(prepared),
             hash_digest=self.hash_digest,
@@ -99,6 +204,8 @@ class MapperEngine:
         # perfbench's specs all have one resource: the shared path is
         # not benchmarked
         alone = sum(rs.pattern is None for rs in self.spec.resources) == 1
+        graphs: list[Frame] = []
+        preserved: set[str] = set()
         for rs in self.spec.resources:
             compiled = compile_resource(rs, cctx, alone)
             if compiled is None or not (rs.graph and rs.preserved_graph):
@@ -109,26 +216,26 @@ class MapperEngine:
                 # resolve_preserved_graphs() folds the distinct g of the
                 # rows the resource fires on (reference folds per row while
                 # emitting, template_processor.py:72-97)
-                self._preserved_graph_plans.append(
-                    rctx.rows_df().select(graph.alias("g")).distinct())
+                g = graph.alias("g")
+                graphs.append(rctx.rows().then(
+                    lambda df, g=g: df.select(g).distinct()))
             else:
-                self.preserved_graphs.add(graph)
-        plans: list[DataFrame] = []
-        quads = lineage.build()
-        if quads is not None:
-            plans.append(quads)
-        if cctx.side_quad_rows:
-            # reconcile proxy concepts + possibleMatch annotations
-            plans.append(quads_from_rows(spark, list(cctx.side_quad_rows)))
-        if self._oneoff_state.quads:
-            rows = [q.as_row() for q in self._oneoff_state.quads]
-            plans.append(quads_from_rows(spark, rows))
-        self.warnings.extend(cctx.warnings)
-        self.error_plans = list(cctx.error_plans)
-        if not plans:
-            return empty_quads(spark)
-        out = union_quads(plans)
-        return dedup_quads(out, salt=self.dedup_salt) if dedup else out
+                preserved.add(graph)
+        # reconcile proxy concepts + possibleMatch annotations, one-offs
+        rows = list(cctx.side_quad_rows)
+        rows += [q.as_row() for q in self._oneoff_state.quads]
+        return PreparedMapping(
+            lineage=lineage.finish(), errors=list(cctx.error_plans),
+            graphs=graphs, preserved=frozenset(preserved),
+            warnings=list(cctx.warnings), rows=rows,
+            volatile=list(cctx.volatile))
+
+    def _key(self, prepared: DataFrame) -> tuple:
+        """The plan-cache key of this engine's compile over ``prepared``:
+        everything `prepare` reads apart from the rows."""
+        return ("mapping", spec_digest(self.spec), prepared.schema.json(),
+                self.hash_digest, _digest(sorted(self.alias_map.items())),
+                registered_transformers())
 
     def resolve_preserved_graphs(self) -> set[str]:
         """The full preserved-graph set for the update/delete sinks.
@@ -139,8 +246,9 @@ class MapperEngine:
         distinct graph IRI).  Matches the reference, which accumulates
         graph IRIs per emitted row (template_processor.py:72-97)."""
         out = set(self.preserved_graphs)
-        for plan in self._preserved_graph_plans:
-            out |= {r.g for r in plan.collect() if r.g is not None}
+        for mapping, prepared in self._graph_inputs:
+            for plan in mapping.bind_frames(mapping.graphs, prepared):
+                out |= {r.g for r in plan.collect() if r.g is not None}
         return out
 
     def count_errors(self) -> dict[str, int]:
@@ -152,8 +260,12 @@ class MapperEngine:
         apply().  Guard eval failures deliberately do NOT count: the
         reference catches them inside process_resource_spec and only logs
         (template_support.py:219-222), so they never reach error_count."""
-        return {label: df.count() for label, df in
-                getattr(self, "error_plans", [])}
+        if self._bound is None:
+            return {}
+        mapping, prepared = self._bound
+        labels = [label for label, _ in mapping.errors]
+        plans = mapping.bind_frames([f for _, f in mapping.errors], prepared)
+        return {label: df.count() for label, df in zip(labels, plans)}
 
     def check_abort_on_error(self) -> None:
         """Reference --abort-on-error: process everything, then fail if any

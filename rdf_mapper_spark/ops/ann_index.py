@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from rdf_mapper_spark import plan_cache
+
 from rdf_mapper_spark.ops.similarity import (
     _mat_lit,
     _sql_quote,
@@ -52,16 +54,11 @@ _META = "_ann_meta.json"
 # FileIndex listing of a few hundred partition dirs costs seconds of
 # DRIVER time per spark.read.parquet — measured 2.75 s for the 256-bucket
 # LSH layout at sandbox scale, dwarfing the pruned scan itself.  A
-# long-lived query service lists the index once; this cache gives the
+# long-lived query service lists the index once; the plan cache gives the
 # same amortization per (session, path).  Builders invalidate on rewrite.
-_READ_CACHE: dict = {}
-
-
 def _read_index(spark: SparkSession, path: str) -> DataFrame:
-    # applicationId, not id(spark): CPython reuses id() after GC, so a
-    # fresh session could alias a dead session's cached plan.
-    key = (spark.sparkContext.applicationId, path)
-    df = _READ_CACHE.get(key)
+    key = ("ann_index", path)
+    df = plan_cache.lookup(spark, key)
     if df is None:
         meta = read_meta(path)
         files = meta.get("files")
@@ -95,7 +92,7 @@ def _read_index(spark: SparkSession, path: str) -> DataFrame:
                 spark.conf.set(thr_key, prev)
         else:
             df = spark.read.parquet(path)
-        _READ_CACHE[key] = df
+        plan_cache.store(spark, key, df)
     return df
 
 
@@ -123,11 +120,6 @@ def _manifest_meta(spark: SparkSession, path: str) -> dict:
     schema = spark.read.option("basePath", path).parquet(
         *[os.path.join(path, f) for f in files]).schema.json()
     return {"files": files, "schema": schema}
-
-
-def _invalidate(path: str) -> None:
-    for key in [k for k in _READ_CACHE if k[1] == path]:
-        del _READ_CACHE[key]
 
 
 def _write_meta(path: str, meta: dict) -> None:
@@ -165,7 +157,7 @@ def build_ivf_index(embeddings: DataFrame, path: str,
     # both the fast-listing cold start and the 100-TB layout.
     assigned.repartition("cell") \
         .write.mode("overwrite").partitionBy("cell").parquet(path)
-    _invalidate(path)
+    plan_cache.invalidate(path)
     meta = {"kind": "ivf", "cells": cells, "dim": len(cells[0]),
             "n_cells": len(cells),
             **_manifest_meta(embeddings.sparkSession, path)}
@@ -224,7 +216,7 @@ def build_lsh_index(embeddings: DataFrame, path: str, dim: int,
     )
     exploded.repartition("bucket") \
         .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    _invalidate(path)
+    plan_cache.invalidate(path)
     meta = {"kind": "lsh", "dim": dim, "n_planes": n_planes,
             "n_tables": n_tables, "seed": seed,
             **_manifest_meta(embeddings.sparkSession, path)}
@@ -355,7 +347,7 @@ def append_to_index(new_embeddings: DataFrame, path: str,
             .write.mode("append").partitionBy("cell").parquet(path)
     else:
         raise ValueError(f"unknown index kind {meta['kind']!r}")
-    _invalidate(path)
+    plan_cache.invalidate(path)
     meta.update(_manifest_meta(new_embeddings.sparkSession, path))
     _write_meta(path, meta)
     return meta
@@ -397,7 +389,7 @@ def build_ivfpq_index(embeddings: DataFrame, path: str,
     )
     assigned.repartition("cell") \
         .write.mode("overwrite").partitionBy("cell").parquet(path)
-    _invalidate(path)
+    plan_cache.invalidate(path)
     meta = {"kind": "ivfpq", "cells": cells, "codebooks": codebooks,
             "dim": len(cells[0]), "n_cells": len(cells),
             **_manifest_meta(embeddings.sparkSession, path)}

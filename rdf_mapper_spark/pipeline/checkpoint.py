@@ -1,8 +1,9 @@
 """Per-stage checkpointing with lineage + count metrics (north rule).
 
 Every stage writes a parquet "stage table" plus a `_metrics.json` sidecar
-recording per-partition row counts, total rows, wall-clock, and the input
-fingerprint. A re-run with the same fingerprint short-circuits to a read —
+recording per-file row counts (``per_partition``: one entry per written
+file, read from the parquet footers with no Spark job), total rows,
+wall-clock, and the input fingerprint. A re-run with the same fingerprint short-circuits to a read —
 any stage is resumable. (Iceberg snapshots play this role on a real
 cluster; parquet directories are the sandbox stand-in.)
 """
@@ -52,11 +53,13 @@ class StageRunner:
         df = fn()
         df.write.mode("overwrite").parquet(data_path)
         out = self.spark.read.parquet(data_path)
-        per_partition = [
-            {"partition": int(r["pid"]), "rows": int(r["rows"])}
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows")).collect()
-        ]
+        per_partition = _file_rows(data_path)
+        if per_partition is None:
+            per_partition = [
+                {"partition": int(r["pid"]), "rows": int(r["rows"])}
+                for r in out.groupBy(F.spark_partition_id().alias("pid"))
+                .agg(F.count(F.lit(1)).alias("rows")).collect()
+            ]
         meta = {
             "stage": name,
             "fingerprint": fingerprint,
@@ -71,3 +74,19 @@ class StageRunner:
             json.dump(meta, fh, indent=1)
         self.metrics[name] = {**meta, "resumed": False}
         return out
+
+
+def _file_rows(path: str) -> list[dict] | None:
+    """One ``{"partition", "file", "rows"}`` entry per parquet file written
+    under ``path``, from the file footers (no Spark job); None when a
+    footer cannot be read, so the caller counts with a job instead."""
+    try:
+        import pyarrow.parquet as pq
+
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        return [{"partition": i, "file": f,
+                 "rows": pq.ParquetFile(os.path.join(path, f))
+                 .metadata.num_rows}
+                for i, f in enumerate(files)]
+    except Exception:
+        return None

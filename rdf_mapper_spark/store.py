@@ -23,16 +23,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rdf_mapper_spark import plan_cache
+
 _NULL_G = "__default__"
 QUAD_COLS = ["g", "sk", "s", "p", "ok", "o", "odt", "olg"]
-
-
-#: (applicationId, path) -> decoded quad DataFrame.  Listing the
-#: predicate-partitioned directory tree is driver-side work repeated by
-#: every read of the same immutable store snapshot; cache the lazy PLAN
-#: per session (the stored-ANN reader's amortization,
-#: ops/ann_index._READ_CACHE) and invalidate on rewrite.
-_READ_CACHE: dict = {}
 
 
 def write_quad_store(quads: DataFrame, path: str,
@@ -46,26 +40,26 @@ def write_quad_store(quads: DataFrame, path: str,
      .withColumn("g", F.coalesce(F.col("g"), F.lit(_NULL_G)))
      .repartition(F.col("p"), spread)
      .write.mode("overwrite").partitionBy("p").parquet(path))
-    for k in [k for k in _READ_CACHE if k[1] == path]:
-        del _READ_CACHE[k]
+    plan_cache.invalidate(path)
 
 
 def read_quad_store(spark: SparkSession, path: str) -> DataFrame:
     """-> the quad DataFrame with the NULL-graph sentinel decoded.  A
     `p = <const>` filter on this frame becomes static partition pruning
-    (asserted in tests/test_store.py)."""
-    key = (spark.sparkContext.applicationId, path)
-    hit = _READ_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = spark.read.parquet(path)
-    out = df.select(
-        F.when(F.col("g") == _NULL_G, F.lit(None).cast("string"))
-        .otherwise(F.col("g")).alias("g"),
-        *[c for c in QUAD_COLS if c != "g"],
-    )
-    _READ_CACHE[key] = out
-    return out
+    (asserted in tests/test_store.py).
+
+    Listing the predicate-partitioned directory tree is driver-side work
+    repeated by every read of the same store snapshot, so the lazy plan
+    is kept in the plan cache until `write_quad_store` rewrites the
+    path."""
+    def read() -> DataFrame:
+        return spark.read.parquet(path).select(
+            F.when(F.col("g") == _NULL_G, F.lit(None).cast("string"))
+            .otherwise(F.col("g")).alias("g"),
+            *[c for c in QUAD_COLS if c != "g"],
+        )
+
+    return plan_cache.cached(spark, ("quad_store", path), read)
 
 
 def scan_files_for(spark: SparkSession, path: str, pred: str) -> int:

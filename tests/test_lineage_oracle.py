@@ -266,3 +266,26 @@ def test_locals_guard_over_null_skips_the_row(spark):
     quads = _same_as_oracle(spark, spec, rows)
     assert {s for _, s, _, _ in quads
             if s.startswith("http://x/s/")} == {"http://x/s/1"}
+
+
+def test_guard_int_and_float_follow_python(spark):
+    """Guard ``int(x)`` / ``float(x)`` over malformed values make the guard
+    false, as a raise does in pyeval; ``int("1.5")`` raises in Python, so
+    it must not truncate; a JSON double truncates."""
+    def spec(guard):
+        return {"globals": {"$datasetBase": BASE},
+                "resources": [{"name": "r", "guard": guard,
+                               "properties": {"@id": "<http://x/r/{id}>",
+                                              "v": "{id}"}}]}
+    values = ["x", "1.5", " 3 ", "+3", "", None]
+    rows = [{"id": str(i), "qty": v} for i, v in enumerate(values)]
+    ints = _same_as_oracle(spark, spec("int(qty) > 1"), rows)
+    assert {s for _, s, _, _ in ints if s.startswith("http://x/r/")} == {
+        "http://x/r/2", "http://x/r/3"}
+    floats = _same_as_oracle(spark, spec("float(qty) > 1"), rows)
+    assert {s for _, s, _, _ in floats if s.startswith("http://x/r/")} == {
+        "http://x/r/1", "http://x/r/2", "http://x/r/3"}
+    doubles = [{"id": "1", "qty": 2.7}, {"id": "2", "qty": 0.5}]
+    got = _same_as_oracle(spark, spec("int(qty) == 2"), doubles)
+    assert {s for _, s, _, _ in got if s.startswith("http://x/r/")} == {
+        "http://x/r/1"}

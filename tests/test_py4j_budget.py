@@ -1,5 +1,6 @@
 """py4j sends per compile: the compiler crosses into the JVM about once
-per expression, not once per expression node.
+per expression, not once per expression node, and a repeat apply of a
+compiled spec only binds it.
 
 Each test wraps the gateway client's ``send_command`` and counts the
 sends the compiling thread makes over one warm compile.  py4j's own
@@ -10,12 +11,17 @@ when it was set plus 15%; it may go down, never up."""
 import contextlib
 import threading
 
+from rdf_mapper_spark import plan_cache
 from rdf_mapper_spark.engine import MapperEngine
 from rdf_mapper_spark.spec import MappingSpec
 
 CSV_BUDGET = 3_702   # 3,219 measured
 JSON_BUDGET = 4_547  # 3,954 measured
 KG_BUDGET = 5_776    # 5,023 measured
+# an apply whose compile is in the plan cache
+CSV_BIND_BUDGET = 85    # 74 measured
+JSON_BIND_BUDGET = 127  # 111 measured
+KG_BIND_BUDGET = 207    # 180 measured
 
 _GLOBALS = {"$datasetBase": "http://data.example.org/reg"}
 _STATUS = {
@@ -74,9 +80,19 @@ def _counting_sends(spark):
 
 
 def _warm_sends(spark, compile_once) -> int:
+    """Sends of a compile that misses the plan cache."""
     compile_once()  # first call pays one-time JVM lookups
+    plan_cache.clear()
     with _counting_sends(spark) as count:
         compile_once()
+    return count[0]
+
+
+def _bind_sends(spark, apply_once) -> int:
+    """Sends of an apply that finds its compile in the plan cache."""
+    apply_once()
+    with _counting_sends(spark) as count:
+        apply_once()
     return count[0]
 
 
@@ -108,3 +124,29 @@ def test_kg_build_quads_split_send_budget(spark):
     n = _warm_sends(spark, lambda: (page_quads(extracted),
                                      linked_quads(links)))
     assert n <= KG_BUDGET, n
+
+
+def test_bind_send_budgets(spark):
+    from rdf_mapper_spark.pipeline.run import linked_quads, page_quads
+
+    csv = spark.createDataFrame([_ROW], _COLS)
+    json_df = spark.createDataFrame(
+        [_ROW + ([("C1", 40), ("C2", 60)],)],
+        _COLS + ", components array<struct<sku:string,share:bigint>>")
+    extracted = spark.createDataFrame(
+        [("http://a.org/p1", "2020-01-01", "text", "en")],
+        "url string, warc_ts string, text string, lang string")
+    links = spark.createDataFrame(
+        [("http://a.org/p1", "Berlin", "http://e.org/B", "http://e.org/C")],
+        "url string, mention string, entity_iri string, entity_type string")
+    got = {
+        "csv": _bind_sends(spark, lambda: MapperEngine(
+            MappingSpec(CSV_SPEC)).apply(csv, file_name="f")),
+        "json": _bind_sends(spark, lambda: MapperEngine(
+            MappingSpec(JSON_SPEC)).apply(json_df, file_name="f")),
+        "kg": _bind_sends(spark, lambda: (page_quads(extracted),
+                                          linked_quads(links))),
+    }
+    assert got["csv"] <= CSV_BIND_BUDGET, got
+    assert got["json"] <= JSON_BIND_BUDGET, got
+    assert got["kg"] <= KG_BIND_BUDGET, got
