@@ -118,3 +118,17 @@ def test_stream_micro_batches_prepare_once(spark, tmp_path, monkeypatch):
     assert len(batches) == 3
     assert len(calls) == 1
     assert spark.read.parquet(str(tmp_path / "out")).count() == 30
+
+
+def test_reconcile_spec_is_never_kept(spark, monkeypatch):
+    calls = _counting_prepare(monkeypatch)
+    spec = {"globals": {"$datasetBase": "http://b.example/ds"},
+            "resources": [{"name": "r", "properties": {
+                "@id": "<http://x/r/{id}>",
+                "org": "{org | reconcile('orgname')}"}}]}
+    df = spark.createDataFrame([("1", "acme")], "id string, org string")
+    for _ in range(2):
+        out = MapperEngine(MappingSpec(spec, auto_declare=False),
+                           alias_map={"acme": "http://o/acme"}).apply(df)
+    assert len(calls) == 2
+    assert "http://o/acme" in {q.o.value for q in quads_of_df(out)}
