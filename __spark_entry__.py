@@ -42,28 +42,26 @@ QUAD_COLS_SQL = "g, sk, s, p, ok, o, odt, olg"
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from rdf_mapper_spark import plan_cache
 
-    key = ("table", sf_dir, name)
-    hit = plan_cache.lookup(spark, key)
-    if hit is not None:
-        return hit
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # The sandbox fixtures are single-file parquet: the scan can only
-    # parallelize per ROW GROUP, so (a) coalesce the empty byte-range
-    # splits away (a 256 KB split size on a single-row-group file
-    # schedules hundreds of tasks of which one produces rows), and
-    # (b) fan rows out across the cluster with a width derived from the
-    # ROW COUNT (~50k rows/task, floor 4, cap defaultParallelism) —
-    # scale-adaptive instead of a constant tuned to the local core
-    # count.  On a real lake (files >> cores) this never triggers and
-    # no shuffle is added.
-    files = df.inputFiles()
-    if len(files) <= 1:
+    def build() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        # The sandbox fixtures are single-file parquet: the scan can only
+        # parallelize per ROW GROUP, so (a) coalesce the empty byte-range
+        # splits away (a 256 KB split size on a single-row-group file
+        # schedules hundreds of tasks of which one produces rows), and
+        # (b) fan rows out across the cluster with a width derived from
+        # the ROW COUNT (~50k rows/task, floor 4, cap defaultParallelism)
+        # — scale-adaptive instead of a constant tuned to the local core
+        # count.  On a real lake (files >> cores) this never triggers and
+        # no shuffle is added.
+        files = df.inputFiles()
+        if len(files) > 1:
+            return df
         dp = spark.sparkContext.defaultParallelism
         rows, rgs = _parquet_footer(files[0]) if files else (0, 1)
         df = df.coalesce(max(1, min(dp, rgs)))
-        width = max(4, min(dp, -(-rows // 50_000)))
-        df = df.repartition(width)
-    return plan_cache.store(spark, key, df)
+        return df.repartition(max(4, min(dp, -(-rows // 50_000))))
+
+    return plan_cache.cached(spark, ("table", sf_dir, name), build)
 
 
 def _parquet_footer(uri: str) -> tuple[int, int]:

@@ -11,7 +11,7 @@ per frame.
       date pandas UDFs, which run on every row), one posexplode_outer per
       map_to level and one explode of a per-row quad array (vocabulary and
       autoCV quads are per-row constants gated on the fired flags); error
-      and @graphAdd frames as recipes; the driver-side constant quads
+      and @graphAdd frames as recipes; the reconcile side quads
       --bind (every apply: every file, micro-batch and KG step)-->
       scan -> filters (pushed down) -> projections -> generate
       -> salted dropDuplicates (RDF set semantics)
@@ -19,9 +19,13 @@ per frame.
 A compile that reads data (reconcile lookups) or the clock (``now``)
 holds for one call only: it is prepared on every apply and never kept.
 
-One-offs are constant-folded on the driver (pyeval) and unioned on as a
-local relation — they are row-independent by construction (reference
-processes one_offs once before any row, template_processor.py:29-33).
+One-offs are constant-folded on the driver (pyeval) once per engine and
+unioned on as a local relation at bind — they are row-independent by
+construction (reference processes one_offs once before any row,
+template_processor.py:29-33).  Their quads are the engine's own (a
+``now`` or ``<uuid>`` one-off differs per engine), never part of a kept
+compile; the one-off subjects a compile refers to (``<::name>``) are in
+its key.
 """
 
 from __future__ import annotations
@@ -75,12 +79,15 @@ class PreparedMapping:
     rows: list[tuple]
     volatile: list[str]
 
-    def bind(self, df: DataFrame) -> Optional[DataFrame]:
+    def bind(self, df: DataFrame,
+             extra_rows: list[tuple] = ()) -> Optional[DataFrame]:
         """The quads (not deduplicated) over ``df``, an input with its
-        ``$file`` / ``$row`` columns; None when nothing emits."""
+        ``$file`` / ``$row`` columns, plus ``extra_rows`` (the caller's
+        one-off quads); None when nothing emits."""
         plans = [] if self.lineage is None else [self.lineage.bind(df)]
-        if self.rows:
-            plans.append(quads_from_rows(df.sparkSession, self.rows))
+        rows = self.rows + list(extra_rows)
+        if rows:
+            plans.append(quads_from_rows(df.sparkSession, rows))
         return union_quads(plans) if plans else None
 
     @staticmethod
@@ -144,6 +151,13 @@ class MapperEngine:
         for one_off in spec.one_offs:
             pyeval.process_resource(one_off, base_ctx, self._oneoff_state)
         self.preserved_graphs |= self._oneoff_state.preserved_graphs
+        self._oneoff_rows = [q.as_row() for q in self._oneoff_state.quads]
+        # the folded one-off subjects a compile may refer to: part of the
+        # plan-cache key, so a one-off minted per engine (<uuid>, now)
+        # never serves another engine's compile
+        self._oneoff_digest = _digest(sorted(
+            (name, repr(term))
+            for name, term in self._oneoff_state.backlinks.items()))
 
     # ------------------------------------------------------------------
     def apply(self, df: DataFrame, file_name: str = "file",
@@ -169,7 +183,7 @@ class MapperEngine:
         self._bound = (mapping, prepared)
         if mapping.graphs:
             self._graph_inputs.append(self._bound)
-        out = mapping.bind(prepared)
+        out = mapping.bind(prepared, self._oneoff_rows)
         if out is None:
             return empty_quads(spark)
         return dedup_quads(out, salt=self.dedup_salt) if dedup else out
@@ -221,20 +235,21 @@ class MapperEngine:
                     lambda df, g=g: df.select(g).distinct()))
             else:
                 preserved.add(graph)
-        # reconcile proxy concepts + possibleMatch annotations, one-offs
-        rows = list(cctx.side_quad_rows)
-        rows += [q.as_row() for q in self._oneoff_state.quads]
+        # reconcile proxy concepts + possibleMatch annotations; the
+        # one-off quads are the engine's own, unioned on at bind
         return PreparedMapping(
             lineage=lineage.finish(), errors=list(cctx.error_plans),
             graphs=graphs, preserved=frozenset(preserved),
-            warnings=list(cctx.warnings), rows=rows,
+            warnings=list(cctx.warnings), rows=list(cctx.side_quad_rows),
             volatile=list(cctx.volatile))
 
     def _key(self, prepared: DataFrame) -> tuple:
         """The plan-cache key of this engine's compile over ``prepared``:
-        everything `prepare` reads apart from the rows."""
+        everything `prepare` reads apart from the rows.  The alias map is
+        not in it: only reconcile reads it, and a reconcile compile is
+        marked ``volatile`` and never kept."""
         return ("mapping", spec_digest(self.spec), prepared.schema.json(),
-                self.hash_digest, _digest(sorted(self.alias_map.items())),
+                self.hash_digest, self._oneoff_digest,
                 registered_transformers())
 
     def resolve_preserved_graphs(self) -> set[str]:

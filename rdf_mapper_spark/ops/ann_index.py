@@ -57,43 +57,39 @@ _META = "_ann_meta.json"
 # long-lived query service lists the index once; the plan cache gives the
 # same amortization per (session, path).  Builders invalidate on rewrite.
 def _read_index(spark: SparkSession, path: str) -> DataFrame:
-    key = ("ann_index", path)
-    df = plan_cache.lookup(spark, key)
-    if df is None:
+    def build() -> DataFrame:
         meta = read_meta(path)
         files = meta.get("files")
-        if files:
-            # Cold-start path: the sidecar manifest (written at build /
-            # append time, when the files were listed anyway) lets the
-            # first read skip the recursive partition-dir walk — the
-            # driver cost that dominated the cold indexed query.
-            # basePath keeps the bucket/cell partition column (and its
-            # IN-filter pruning) intact over explicit leaf files.
-            reader = spark.read.option("basePath", path)
-            if meta.get("schema"):
-                # Sidecar schema skips footer-based inference across
-                # every index file on the cold read.
-                from pyspark.sql.types import StructType
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(meta["schema"])))
-            # >32 explicit paths trips Spark's parallelPartitionDiscovery
-            # JOB — one tiny task per file, slower than a sequential
-            # driver stat for a bounded manifest.  Raise the threshold
-            # for this read only (restored after); a manifest past 10k
-            # files keeps the parallel job, which is right at that size.
-            thr_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-            prev = spark.conf.get(thr_key, "32")
-            if len(files) <= 10_000:
-                spark.conf.set(thr_key, str(len(files) + 1))
-            try:
-                df = reader.parquet(
-                    *[os.path.join(path, f) for f in files])
-            finally:
-                spark.conf.set(thr_key, prev)
-        else:
-            df = spark.read.parquet(path)
-        plan_cache.store(spark, key, df)
-    return df
+        if not files:
+            return spark.read.parquet(path)
+        # Cold-start path: the sidecar manifest (written at build /
+        # append time, when the files were listed anyway) lets the
+        # first read skip the recursive partition-dir walk — the
+        # driver cost that dominated the cold indexed query.
+        # basePath keeps the bucket/cell partition column (and its
+        # IN-filter pruning) intact over explicit leaf files.
+        reader = spark.read.option("basePath", path)
+        if meta.get("schema"):
+            # Sidecar schema skips footer-based inference across
+            # every index file on the cold read.
+            from pyspark.sql.types import StructType
+            reader = reader.schema(
+                StructType.fromJson(json.loads(meta["schema"])))
+        # >32 explicit paths trips Spark's parallelPartitionDiscovery
+        # JOB — one tiny task per file, slower than a sequential
+        # driver stat for a bounded manifest.  Raise the threshold
+        # for this read only (restored after); a manifest past 10k
+        # files keeps the parallel job, which is right at that size.
+        thr_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        prev = spark.conf.get(thr_key, "32")
+        if len(files) <= 10_000:
+            spark.conf.set(thr_key, str(len(files) + 1))
+        try:
+            return reader.parquet(*[os.path.join(path, f) for f in files])
+        finally:
+            spark.conf.set(thr_key, prev)
+
+    return plan_cache.cached(spark, ("ann_index", path), build)
 
 
 def _refresh_manifest(spark: SparkSession, path: str) -> list[str]:

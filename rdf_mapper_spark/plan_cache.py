@@ -7,8 +7,8 @@ keeps the result under a key that names everything the build read, so a
 repeat is a lookup:
 
 * ``("mapping", ...)``: a compiled mapping (`engine.PreparedMapping`),
-  keyed by spec content, prepared input schema, digest, alias map and the
-  registered-transformer table.  It holds Column trees and SQL text
+  keyed by spec content, prepared input schema, digest, the engine's
+  folded one-off subjects and the registered-transformer table.  It holds Column trees and SQL text
   only, never a DataFrame, so it pins no plan or cached block;
 * ``("quad_store", path)`` / ``("ann_index", path)``: the lazy read plan
   of a stored quad table or ANN index;

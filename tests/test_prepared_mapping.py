@@ -132,3 +132,112 @@ def test_reconcile_spec_is_never_kept(spark, monkeypatch):
                            alias_map={"acme": "http://o/acme"}).apply(df)
     assert len(calls) == 2
     assert "http://o/acme" in {q.o.value for q in quads_of_df(out)}
+
+
+def test_one_off_quads_are_each_engines_own(spark, monkeypatch):
+    """A one-off minted per engine (<uuid>, now) is folded by each engine;
+    a kept compile never carries another engine's value, neither in its
+    quads nor in a <::name> reference to the one-off subject."""
+    calls = _counting_prepare(monkeypatch)
+    plan_cache.clear()
+    spec = {"globals": {"$datasetBase": "http://b.example/ds"},
+            "one_offs": [{"name": "run", "properties": {
+                "@id": "<uuid>", "at": "{$file | now}"}}],
+            "resources": [{"name": "r", "properties": {
+                "@id": "<http://x/r/{id}>", "run": "<::run>"}}]}
+    df = spark.createDataFrame([("1",)], "id string")
+    runs, stamps = [], []
+    for _ in range(2):
+        quads = quads_of_df(MapperEngine(
+            MappingSpec(spec, auto_declare=False)).apply(df))
+        run = {q.o.value for q in quads if q.p.endswith("run")}
+        assert len(run) == 1
+        assert {q.s.value for q in quads if q.p.endswith("at")} == run
+        runs.append(run.pop())
+        stamps.append({q.o.value for q in quads if q.p.endswith("at")})
+    assert runs[0] != runs[1]
+    assert len(stamps[0]) == 1 and stamps[0] != stamps[1]
+    # the engines' one-off subjects differ, so neither compile serves the
+    # other; an engine's second apply is a hit
+    assert len(calls) == 2
+
+
+def test_deterministic_one_offs_share_the_compile(spark, monkeypatch):
+    calls = _counting_prepare(monkeypatch)
+    plan_cache.clear()
+    spec = {"globals": {"$datasetBase": "http://b.example/ds"},
+            "one_offs": [{"name": "ds", "properties": {
+                "@id": "<http://x/ds>", "label": "products"}}],
+            "resources": [{"name": "r", "properties": {
+                "@id": "<http://x/r/{id}>", "in": "<::ds>"}}]}
+    df = spark.createDataFrame([("1",)], "id string")
+    outs = [set(quads_of_df(MapperEngine(
+        MappingSpec(spec, auto_declare=False)).apply(df))) for _ in range(2)]
+    assert len(calls) == 1
+    assert outs[0] == outs[1]
+    assert any(q.o.value == "http://x/ds" for q in outs[0])
+
+
+def test_api_reconcile_spec_is_never_kept(spark, tmp_path, monkeypatch):
+    """A $reconciliationAPI lookup reads the input's keys: each apply
+    prepares again and asks the service for its own keys."""
+    import json
+
+    calls = _counting_prepare(monkeypatch)
+    log = tmp_path / "calls.jsonl"
+
+    def transport(endpoint, batch):
+        with open(log, "a") as fh:
+            fh.write(json.dumps(batch) + "\n")
+        return {i: {"result": [{"id": "http://o/" + q["query"],
+                                "match": True}]}
+                for i, q in batch.items()}
+
+    spec = {"globals": {"$datasetBase": "http://b.example/ds",
+                        "$reconciliationAPI": "http://svc/reconcile"},
+            "resources": [{"name": "r", "properties": {
+                "@id": "<http://x/r/{id}>",
+                "org": "{org | reconcile('orgname')}"}}]}
+    objects = []
+    for key in ("acme", "globex"):
+        df = spark.createDataFrame([("1", key)], "id string, org string")
+        out = MapperEngine(MappingSpec(spec, auto_declare=False),
+                           reconcile_transport=transport).apply(df)
+        objects.append({q.o.value for q in quads_of_df(out)})
+    assert len(calls) == 2
+    assert "http://o/acme" in objects[0] and "http://o/globex" in objects[1]
+    asked = [q["query"] for line in log.read_text().splitlines()
+             for q in json.loads(line).values()]
+    assert sorted(set(asked)) == ["acme", "globex"]
+
+
+def test_kg_step_from_the_cache_equals_a_fresh_compile(spark, monkeypatch):
+    """The KG step's page, link and entity specs bound from kept compiles
+    give the same quads as a compile of their own."""
+    from rdf_mapper_spark.pipeline.canonicalize import (
+        canonical_mapping,
+        sameas_edges_from_aliases,
+    )
+    from rdf_mapper_spark.pipeline.datagen import make_alias_dict, make_pages
+    from rdf_mapper_spark.pipeline.run import kg_step
+    from rdf_mapper_spark.quads import union_quads
+
+    aliases = make_alias_dict(spark, 20)
+    mapping = canonical_mapping(sameas_edges_from_aliases(aliases))
+
+    def quads(pages) -> set:
+        page_q, canonical = kg_step(pages, aliases, lambda: mapping,
+                                    lambda name, build: build())
+        return {tuple(r) for r in union_quads([page_q, canonical()])
+                .collect()}
+
+    calls = _counting_prepare(monkeypatch)
+    plan_cache.clear()
+    quads(make_pages(spark, 40, n_entities=20, seed=1))
+    pages = make_pages(spark, 40, n_entities=20, seed=2)
+    kept = quads(pages)
+    assert len(calls) == 3
+    plan_cache.clear()
+    fresh = quads(pages)
+    assert len(calls) == 6
+    assert kept == fresh and len(kept) > 100
