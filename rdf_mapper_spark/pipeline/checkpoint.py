@@ -3,8 +3,8 @@
 Every stage writes a parquet "stage table" plus a `_metrics.json` sidecar
 recording per-file row counts (``per_partition``: one entry per written
 file, read from the parquet footers with no Spark job), total rows,
-wall-clock, and the input fingerprint. A re-run with the same fingerprint short-circuits to a read —
-any stage is resumable. (Iceberg snapshots play this role on a real
+wall-clock, and the input fingerprint. A re-run with the same
+fingerprint short-circuits to a read — any stage is resumable. (Iceberg snapshots play this role on a real
 cluster; parquet directories are the sandbox stand-in.)
 """
 

@@ -8,8 +8,9 @@ repeat is a lookup:
 
 * ``("mapping", ...)``: a compiled mapping (`engine.PreparedMapping`),
   keyed by spec content, prepared input schema, digest, the engine's
-  folded one-off subjects and the registered-transformer table.  It holds Column trees and SQL text
-  only, never a DataFrame, so it pins no plan or cached block;
+  folded one-off subjects and the registered-transformer table.  It
+  holds Column trees and SQL text only, never a DataFrame, so it pins
+  no plan or cached block;
 * ``("quad_store", path)`` / ``("ann_index", path)``: the lazy read plan
   of a stored quad table or ANN index;
 * the driver entry's fixture tables and flagship emission plans.

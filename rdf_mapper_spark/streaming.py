@@ -5,8 +5,8 @@ template_processor.py:22); Spark gets the streaming version for free: the
 same compiled plan runs inside `foreachBatch`, appending quads to the
 (graph-partitioned) sink.  The spec compiles once, on the first
 micro-batch (`MapperEngine.prepare`, kept in `plan_cache`); every later
-batch of the same schema only binds it. The KG streams run the batch pipeline's own
-`kg_step` (pipeline/run.py) per micro-batch, so a stream and a batch run
+batch of the same schema only binds it. The KG streams run the batch
+pipeline's own `kg_step` (pipeline/run.py) per micro-batch, so a stream and a batch run
 differ only in how they materialize a stage. Because every IRI-minting
 path is deterministic (hash/content-keyed; `now` pinned per run; `<uuid>`
 excluded), replaying a micro-batch after failure is idempotent under quad

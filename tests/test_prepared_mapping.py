@@ -51,7 +51,8 @@ def test_schema_or_spec_change_misses(spark, monkeypatch):
     plan_cache.clear()
     df = spark.createDataFrame([("1", "A")], COLS)
     MapperEngine(MappingSpec(SPEC)).apply(df)
-    MapperEngine(MappingSpec(SPEC)).apply(df.withColumnRenamed("status", "state"))
+    MapperEngine(MappingSpec(SPEC)).apply(
+        df.withColumnRenamed("status", "state"))
     MapperEngine(MappingSpec(SPEC)).apply(
         spark.createDataFrame([(1, "A")], "id bigint, status string"))
     edited = {**SPEC, "mappings": {"status": {"A": "<http://b.example/s/B>"}}}
